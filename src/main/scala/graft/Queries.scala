@@ -2523,15 +2523,20 @@ object Queries {
     val fut1 = scala.concurrent.Future(
       Classifier.trainLogistic(sample, label, iters = 2, buckets = 4096))(
       scala.concurrent.ExecutionContext.global)
-    // the background train is ALWAYS joined (bounded, in a finally): if
-    // the inline train throws, its Spark jobs must not keep running
-    // unobserved, and a hang in either train surfaces as a loud timeout
-    // instead of blocking the bench forever
+    // the background train is ALWAYS joined (bounded): if the inline train
+    // throws, its Spark jobs must not keep running unobserved, and a hang
+    // in either train surfaces as a loud timeout instead of blocking the
+    // bench forever. A timeout while the inline train is already failing
+    // rides along as suppressed, so the root cause is what propagates.
     val joinBudget = scala.concurrent.duration.Duration(600, "s")
     val (m2, _) =
       try Classifier.trainLogistic(sample.repartition(13), label,
         iters = 2, buckets = 4096)
-      finally scala.concurrent.Await.ready(fut1, joinBudget)
+      catch { case e: Throwable =>
+        try scala.concurrent.Await.ready(fut1, joinBudget)
+        catch { case t: Throwable => e.addSuppressed(t) }
+        throw e
+      }
     val (m1, _) = scala.concurrent.Await.result(fut1, joinBudget)
     Seq((acc >= 0.9, monotone, m1 == m2))
       .toDF("ok_acc", "ok_loss_monotone", "ok_deterministic")

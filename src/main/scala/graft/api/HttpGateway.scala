@@ -2,6 +2,8 @@ package graft.api
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.concurrent.TrieMap
@@ -53,15 +55,34 @@ final class HttpGateway(spark: SparkSession, port: Int = 0,
     sessions.getOrElseUpdate(db, new AndlInterp(spark, ".",
       modes.getOrElse(db, AndlInterp.Modes.fromConf(spark))))
 
+  // jdk.httpserver writes a reply's headers and body as two TCP segments
+  // and never sets TCP_NODELAY, so Nagle holds the body back until the
+  // client ACKs the headers, which it delays by ~40 ms, on every reply.
+  // The JDK reads this property once, when the first server in the JVM is
+  // built, so it is set here, before HttpServer.create.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   server.createContext("/api", (ex: HttpExchange) => handle(ex))
   // a couple of worker threads: per-db serialization happens inside
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+  private val pool = {
+    val n = new AtomicInteger
+    Executors.newFixedThreadPool(4, (r: Runnable) =>
+      new Thread(r, s"graft-http-${n.incrementAndGet()}"))
+  }
+  server.setExecutor(pool)
 
   /** The bound port (useful with port=0 for an ephemeral test server). */
   def boundPort: Int = server.getAddress.getPort
   def start(): Unit = server.start()
-  def stop(): Unit = { server.stop(0); sessions.clear() }
+  /** Closes the socket, then lets in-flight requests finish (bounded) and
+    * releases the worker threads, so a JVM that used a gateway can exit. */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    pool.awaitTermination(30, TimeUnit.SECONDS)
+    sessions.clear()
+  }
 
   // ----------------------------------------------------------- dispatch
 

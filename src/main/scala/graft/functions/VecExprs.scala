@@ -159,8 +159,9 @@ object FloatVecL2Sq {
   * (c & 255) + 1)), 0.0, _+_)` — two interpreted higher-order passes and
   * an intermediate array PER (corpus row × query), the inner loop of every
   * PQ/IVF-PQ search and serve path. Index-order left-fold accumulation →
-  * bit-identical doubles. NULL semantics: a null code element or a null
-  * LUT slot yields NULL (as element_at + null-poisoned fold did). */
+  * bit-identical doubles. NULL semantics: a null code element, a null
+  * LUT slot or an index past the LUT's end (a short or mismatched LUT)
+  * yields NULL (as element_at + null-poisoned fold did). */
 case class AdcLutSum(left: Expression, right: Expression, nCodes: Int)
     extends BinaryExpression {
   require(nCodes >= 1 && nCodes <= 256, s"adc_lut_sum: nCodes=$nCodes")
@@ -186,7 +187,7 @@ case class AdcLutSum(left: Expression, right: Expression, nCodes: Int)
     while (i < n) {
       if (codes.isNullAt(i)) return null
       val idx = i * nCodes + (codes.getByte(i) & 0xff)
-      if (lut.isNullAt(idx)) return null
+      if (idx >= lut.numElements() || lut.isNullAt(idx)) return null
       acc += lut.getDouble(idx)
       i += 1
     }
@@ -205,7 +206,9 @@ case class AdcLutSum(left: Expression, right: Expression, nCodes: Int)
          |for (int $i = 0; $i < $n; $i++) {
          |  if ($codes.isNullAt($i)) { ${ev.isNull} = true; break; }
          |  int $idx = $i * $nCodes + ($codes.getByte($i) & 0xff);
-         |  if ($lut.isNullAt($idx)) { ${ev.isNull} = true; break; }
+         |  if ($idx >= $lut.numElements() || $lut.isNullAt($idx)) {
+         |    ${ev.isNull} = true; break;
+         |  }
          |  $acc += $lut.getDouble($idx);
          |}
          |if (!${ev.isNull}) ${ev.value} = $acc;

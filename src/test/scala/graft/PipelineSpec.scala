@@ -265,6 +265,42 @@ class PipelineSpec extends SparkSpec {
       .count() === 0)
   }
 
+  test("adc_lut_sum returns NULL, never an out-of-bounds read, for a LUT " +
+    "too short for the codes — generated and interpreted alike") {
+    // nCodes = 4 and 3 codes need a 12-slot LUT; odd ids carry only 8, so
+    // their third code indexes past the end. Built from range (not a local
+    // relation) so the optimizer cannot fold the kernel away.
+    val adc = spark.range(0, 40).selectExpr("id",
+      "transform(sequence(0, 2), i -> cast((id + i) % 4 as byte)) as codes",
+      "transform(sequence(0, if(id % 2 = 0, 11, 7)), " +
+        "i -> cast(i + id * 16 as double)) as lut")
+      .select(col("id"), graft.functions.AdcLutSum(col("codes"), col("lut"), 4).as("s"))
+    def expected(id: Long): Option[Double] =
+      if (id % 2 == 1) None
+      else Some((0 until 3).foldLeft(0.0) { (acc, i) =>
+        acc + (i * 4 + (id + i) % 4 + id * 16).toDouble })
+    val modes = Seq(
+      "codegen" -> Map("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false"),
+      "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    modes.foreach { case (mode, confs) =>
+      val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val got = adc.collect().map(r =>
+          r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+        (0L until 40L).foreach { id =>
+          assert(got(id) === expected(id), s"$mode: id $id")
+        }
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
   test("cosine and dot on float arrays") {
     val df = Seq((Array(1.0f, 0.0f), Array(1.0f, 0.0f)),
                  (Array(1.0f, 0.0f), Array(0.0f, 1.0f))).toDF("a", "b")
