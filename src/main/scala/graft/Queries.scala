@@ -29,7 +29,7 @@ object Queries {
     * applied once at the scan. */
   private def emb(s: SparkSession, dir: String): Rel =
     Rel.distinct(Sources.embeddingToFloat(
-      s.read.parquet(s"$dir/embeddings.parquet")))
+      Sources.parquet(s, s"$dir/embeddings.parquet")))
 
   private val dec182 = DecimalType(18, 2)
   private val dec184 = DecimalType(18, 4)
@@ -300,30 +300,25 @@ object Queries {
     // a HashPartitioning(src) sorted bucketed scan — Exchange-free and
     // Sort-free on the edge side — instead of re-shuffling + re-sorting
     // the UnknownPartitioning pin per LAYER (8 layers/round).
-    val (edges, edgeLayout) =
-      if (edgesDf.count() * 16L < (32L << 20)) (broadcast(edgesDf), null)
-      else {
-        val l = graft.sources.ScratchBuckets.create(edgesDf, Seq("src"))
-        (l.df, l)
-      }
     val seed = ev.where(col("event_type") === "error").project("event_id")
     // string-qualified aliases: the frontier itself derives from `edges`
     // after round 1, so df-reference column equality would be an
     // ambiguous self-join
-    def fix(): DataFrame = WhileFix(seed.df,
+    def fix(edges: DataFrame): DataFrame = WhileFix(seed.df,
       fr => fr.alias("f").join(edges.alias("e"), col("f.event_id") === col("e.src"))
         .select(col("e.dst").as("event_id")),
       tinyRows = 1000L, probe = probe)
-    // fallback regime: plan the per-layer joins with the layout's sort
-    // order visible, so the edge side is Sort-free as well as Exchange-free
-    val out =
-      if (edgeLayout == null) fix()
-      else graft.sources.ScratchBuckets.withSortedScans(s)(fix())
     // the fixpoint's legs are checkpoint-truncated — the result never
-    // reads the edge table again; its pin (edge-sized) is dead, and so is
-    // the fallback regime's scratch bucketed layout
-    edgesDf.unpin()
-    if (edgeLayout != null) edgeLayout.close(s)
+    // reads the edge table again, so the fallback regime's scratch layout
+    // is dead when fix returns. Its sort order is visible while the
+    // per-layer joins plan: the edge side is Sort-free as well as
+    // Exchange-free
+    val out =
+      if (edgesDf.count() * 16L < (32L << 20)) fix(broadcast(edgesDf))
+      else graft.sources.ScratchBuckets.withLayout(edgesDf, Seq("src")) { l =>
+        graft.sources.ScratchBuckets.withSortedScans(s)(fix(l.df))
+      }
+    edgesDf.unpin() // the edge-sized pin is dead too
     out
   }
 
@@ -662,7 +657,7 @@ object Queries {
   /** events.ts is parquet TIMESTAMP(NANOS): shared nanos→micros coercion
     * ([[Sources.nanosTsToMicros]] — same helper the streaming source uses). */
   private def events(s: SparkSession, dir: String): Rel =
-    Rel.distinct(Sources.nanosTsToMicros(s.read.parquet(s"$dir/events.parquet")))
+    Rel.distinct(Sources.nanosTsToMicros(Sources.parquet(s, s"$dir/events.parquet")))
 
   def qEventsHour(s: SparkSession, dir: String): DataFrame =
     events(s, dir)
@@ -1711,7 +1706,7 @@ object Queries {
     * green row proves the streaming plan computes the same relation as
     * the batch plan over the same data. */
   def qStreamWindow(s: SparkSession, dir: String): DataFrame = {
-    val batchEvents = Sources.nanosTsToMicros(s.read.parquet(s"$dir/events.parquet"))
+    val batchEvents = Sources.nanosTsToMicros(Sources.parquet(s, s"$dir/events.parquet"))
     val batch = graft.streaming.EventStream.hourlyByTypeExact(batchEvents)
       .localCheckpoint()
     runStreamChecked(s, batch) { tmp =>
@@ -1739,7 +1734,7 @@ object Queries {
     * computes the identical range join in batch SQL, so a green row
     * certifies the streaming join's results equal the batch relation. */
   def qStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    val batchEvents = Sources.nanosTsToMicros(s.read.parquet(s"$dir/events.parquet"))
+    val batchEvents = Sources.nanosTsToMicros(Sources.parquet(s, s"$dir/events.parquet"))
     val batch = graft.streaming.EventStream.purchaseClickJoin(batchEvents)
       .localCheckpoint()
     // a stream-stream join keeps TWO state stores per shuffle partition;
@@ -1848,7 +1843,7 @@ object Queries {
     try q.awaitTermination() finally q.stop()
     val rep = mon.report()
     val bound = 3 * 1.04 / math.sqrt(math.pow(2.0, lgK))
-    val exact = s.read.parquet(s"$dir/documents.parquet").agg(
+    val exact = Sources.parquet(s, s"$dir/documents.parquet").agg(
       round(countDistinct(col("doc_id")).cast("double") / count(lit(1)), 6).as("e0"),
       round(countDistinct(col("lang")).cast("double") / count(lit(1)), 6).as("e1"))
       .collect()(0)
@@ -2200,7 +2195,7 @@ object Queries {
   private def runLang(s: SparkSession, dir: String, tables: Seq[String],
                       script: String): DataFrame = {
     val interp = new graft.lang.AndlInterp(s, dir)
-    tables.foreach(n => interp.defineRelvar(n, s.read.parquet(s"$dir/$n.parquet")))
+    tables.foreach(n => interp.defineRelvar(n, Sources.parquet(s, s"$dir/$n.parquet")))
     interp.run(script, "q_lang")
     interp.relvar("result")
   }

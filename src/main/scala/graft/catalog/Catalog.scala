@@ -116,7 +116,8 @@ final class Catalog(val spark: SparkSession) {
         val path = s"$historyDir/${name}__c$catalogId/v$newVersion.parquet"
         r0.df.write.mode("overwrite").parquet(path)
         snapVers(name) = snapVers.getOrElse(name, Vector.empty) :+ newVersion
-        Rel.distinct(spark.read.parquet(path))
+        // read back under the written heading: no inference job
+        Rel.distinct(graft.sources.Sources.parquet(spark, path, Some(r0.df.schema)))
       } else r0
     relvars.get(name).foreach { old =>
       history(name) = history.getOrElse(name, Vector.empty) :+ old }
@@ -922,7 +923,7 @@ final class Catalog(val spark: SparkSession) {
           !boundTo.get(n).contains(s"$dir/$n.parquet") =>
         val tmp = s"$dir/.saving_$n.parquet"
         r.df.write.mode("overwrite").parquet(tmp)
-        (n, tmp, s"$dir/$n.parquet")
+        (n, tmp, s"$dir/$n.parquet", r.df.schema)
     }
     // bucketed relvars persist their LAYOUT, not a plain snapshot: the
     // bucket files land under $dir/_bucketed/<name> (tmp+rename — a
@@ -976,7 +977,7 @@ final class Catalog(val spark: SparkSession) {
         }
       }
     }
-    pending.foreach { case (n, tmp, target) =>
+    pending.foreach { case (n, tmp, target, written) =>
       val tgt = new org.apache.hadoop.fs.Path(target)
       if (hfs.exists(tgt)) hfs.delete(tgt, true)
       require(hfs.rename(new org.apache.hadoop.fs.Path(tmp), tgt),
@@ -986,9 +987,11 @@ final class Catalog(val spark: SparkSession) {
       // BUCKETED relvars are exempt — rebinding to the plain snapshot
       // would silently drop the bucketing metadata (and the zero-Exchange
       // join contract); their file carries the DATA for load(), and the
-      // persisted bucket spec below makes load() rebuild the layout
+      // persisted bucket spec below makes load() rebuild the layout. The
+      // read-back takes the written heading: no inference job
       if (!bucketSpec.contains(n)) {
-        relvars(n) = Rel.distinct(spark.read.parquet(target))
+        relvars(n) = Rel.distinct(
+          graft.sources.Sources.parquet(spark, target, Some(written)))
         boundTo(n) = target
       }
     }

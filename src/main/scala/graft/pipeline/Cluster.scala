@@ -89,55 +89,56 @@ object Cluster {
     // edge side — only the node-sized label vector moves (guide §2.4/§3.2,
     // same fix as Graph.pageRank's fallback regime).
     val spark = pairs.sparkSession
-    val edgeLayout = graft.sources.ScratchBuckets.create(edges, Seq("src"))
-    val e = edgeLayout.df
-    edges.unpin(); p.unpin() // superseded by the bucketed layout
-    var labels = e.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lbl"))
-      .pin()
-    // Min-label propagation is MONOTONE: a node's label never increases.
-    // So convergence ⇔ sum(lbl) unchanged between rounds — one map-side-
-    // combinable aggregate per round, replacing a join-with-previous +
-    // count. Exact decimal sum (no fp loss on 64-bit ids at any scale).
-    def lblSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("lbl").cast("decimal(38,0)"))).collect()(0)
-        .getDecimal(0)
-    var prevSum = lblSum(labels)
-    var converged = false
-    var iter = 0
-    // withSortedScans: the sorted bucketed edge scan reports its order, so
-    // each round's neighbor-min join plans Sort-free on the edge side too
-    graft.sources.ScratchBuckets.withSortedScans(spark) {
-    while (!converged && iter < maxIter) {
-      // (a) neighbor-min: the smallest label adjacent to each node. The
-      // groupBy is map-side combinable; the join key is the node id (the
-      // bucketed layout's key — no exchange, no sort on the edge side).
-      val nbrMin = e.join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("lbl")).as("nlbl"))
-      val stepped = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-      // (b) pointer doubling: follow the label one hop (labels are node
-      // ids, so lbl always resolves). Cuts chain length in half per round.
-      val jump = stepped.alias("x")
-        .join(stepped.select(col("id").as("lbl"), col("lbl").as("lbl2")).alias("y"),
-          Seq("lbl"), "left")
-        .select(col("id"), coalesce(col("lbl2"), col("lbl")).as("lbl"))
-      if (planProbe != null) planProbe.add(s"round_${iter + 1}", jump)
-      val next = jump.pinLazy()
-      val s = lblSum(next) // scans next: the lazy pin materializes here
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels.unpin() // superseded round's node-sized pin — release eagerly
-      labels = next
-      iter += 1
+    // the bucketed edge layout is dead once the loop converges (the final
+    // label pin, eager-materialized by its round's lblSum scan, is the
+    // result's storage) — withLayout deletes the scratch files then, or
+    // when a round throws
+    graft.sources.ScratchBuckets.withLayout(edges, Seq("src")) { edgeLayout =>
+      val e = edgeLayout.df
+      edges.unpin(); p.unpin() // superseded by the bucketed layout
+      var labels = e.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("lbl"))
+        .pin()
+      // Min-label propagation is MONOTONE: a node's label never increases.
+      // So convergence ⇔ sum(lbl) unchanged between rounds — one map-side-
+      // combinable aggregate per round, replacing a join-with-previous +
+      // count. Exact decimal sum (no fp loss on 64-bit ids at any scale).
+      def lblSum(df: DataFrame): java.math.BigDecimal =
+        df.agg(sum(col("lbl").cast("decimal(38,0)"))).collect()(0)
+          .getDecimal(0)
+      var prevSum = lblSum(labels)
+      var converged = false
+      var iter = 0
+      // withSortedScans: the sorted bucketed edge scan reports its order, so
+      // each round's neighbor-min join plans Sort-free on the edge side too
+      graft.sources.ScratchBuckets.withSortedScans(spark) {
+      while (!converged && iter < maxIter) {
+        // (a) neighbor-min: the smallest label adjacent to each node. The
+        // groupBy is map-side combinable; the join key is the node id (the
+        // bucketed layout's key — no exchange, no sort on the edge side).
+        val nbrMin = e.join(labels.withColumnRenamed("id", "src"), "src")
+          .groupBy(col("dst").as("id")).agg(min(col("lbl")).as("nlbl"))
+        val stepped = labels.join(nbrMin, Seq("id"), "left")
+          .select(col("id"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
+        // (b) pointer doubling: follow the label one hop (labels are node
+        // ids, so lbl always resolves). Cuts chain length in half per round.
+        val jump = stepped.alias("x")
+          .join(stepped.select(col("id").as("lbl"), col("lbl").as("lbl2")).alias("y"),
+            Seq("lbl"), "left")
+          .select(col("id"), coalesce(col("lbl2"), col("lbl")).as("lbl"))
+        if (planProbe != null) planProbe.add(s"round_${iter + 1}", jump)
+        val next = jump.pinLazy()
+        val s = lblSum(next) // scans next: the lazy pin materializes here
+        converged = s.compareTo(prevSum) == 0
+        prevSum = s
+        labels.unpin() // superseded round's node-sized pin — release eagerly
+        labels = next
+        iter += 1
+      }
+      }
+      require(converged, s"connectedComponents did not converge in $maxIter rounds")
+      labels.select(col("id"), col("lbl").as("rep"))
     }
-    }
-    require(converged, s"connectedComponents did not converge in $maxIter rounds")
-    // the final label pin (eager-materialized by its round's lblSum scan)
-    // is the result's storage; the bucketed edge layout is dead once the
-    // loop converges — delete the scratch files now
-    edgeLayout.close(spark)
-    labels.select(col("id"), col("lbl").as("rep"))
   }
 
   /** Driver-tier union-find over a collected edge list (path compression +

@@ -121,5 +121,5 @@ object Release {
     * comparison — without touching the release's data files. */
   def driftBaseline(spark: org.apache.spark.sql.SparkSession,
                     releaseDir: String): DataFrame =
-    spark.read.parquet(s"$releaseDir/drift_baseline")
+    graft.sources.Sources.parquet(spark, s"$releaseDir/drift_baseline")
 }

@@ -973,9 +973,10 @@ object Similarity {
       path: String,
       node: com.fasterxml.jackson.databind.JsonNode): IvfPqIndex = {
     IvfPqIndex(
-      spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/codebooks"),
-      spark.read.parquet(s"$path/${codesDirName(codesGenOf(node))}"),
+      graft.sources.Sources.parquet(spark, s"$path/centroids"),
+      graft.sources.Sources.parquet(spark, s"$path/codebooks"),
+      graft.sources.Sources.parquet(spark,
+        s"$path/${codesDirName(codesGenOf(node))}"),
       node.get("m").asInt(), node.get("nCodes").asInt(),
       node.get("cId").asText())
   }

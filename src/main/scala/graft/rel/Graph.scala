@@ -122,21 +122,12 @@ object Graph {
     // contributions move per iteration (guide §2.4/§3.2). The node set is
     // re-homed the same way (bucketed by node) for the per-iteration rank
     // rebuild join. Both layouts are scratch artifacts of THIS run —
-    // written, read by the loop, deleted before returning.
-    val edgeLayout =
-      if (tinyRanks) null
-      else graft.sources.ScratchBuckets.create(edges, Seq("src"))
-    val nodeLayout =
-      if (tinyRanks) null
-      else graft.sources.ScratchBuckets.create(nodes, Seq("node"))
-    if (!tinyRanks) { edges.unpin(); nodes.unpin() } // superseded by layouts
-    val edgesIter = if (tinyRanks) edges else edgeLayout.df
-    val nodesIter = if (tinyRanks) nodes else nodeLayout.df
+    // written, read by the loop, deleted before returning (or throwing).
 
     // The loop body, shared by both regimes; in the fallback regime it
     // runs under withSortedScans so the sorted bucketed scans report their
     // order and the per-iteration joins plan Sort-free on the layout sides.
-    def iterate(): DataFrame = {
+    def iterate(edgesIter: DataFrame, nodesIter: DataFrame): DataFrame = {
     var pr = nodesIter.withColumn("pr", round(lit(1.0) / n, 12)).pin()
     var i = 0
     var converged = false
@@ -190,16 +181,24 @@ object Graph {
     }
     pr
     }
-    val pr =
-      if (tinyRanks) iterate()
-      else graft.sources.ScratchBuckets.withSortedScans(spark)(iterate())
     // the final `pr` pin (node-sized, eager — already materialized) is the
     // bounded result pin; the EDGE-sized layout and the node-set artifacts
     // are dead once it exists — leaving them resident is corpus-scale
     // executor storage / scratch disk held until cleanup (PinLedgerSpec)
-    if (tinyRanks) { edges.unpin(); nodes.unpin() }
-    else { edgeLayout.close(spark); nodeLayout.close(spark) }
-    val out = pr.select(col("node"), round(col("pr"), 6).as("pr"))
-    out
+    val pr =
+      if (tinyRanks) {
+        val pr = iterate(edges, nodes)
+        edges.unpin(); nodes.unpin()
+        pr
+      } else {
+        import graft.sources.ScratchBuckets.{withLayout, withSortedScans}
+        withLayout(edges, Seq("src")) { edgeLayout =>
+          withLayout(nodes, Seq("node")) { nodeLayout =>
+            edges.unpin(); nodes.unpin() // superseded by the layouts
+            withSortedScans(spark)(iterate(edgeLayout.df, nodeLayout.df))
+          }
+        }
+      }
+    pr.select(col("node"), round(col("pr"), 6).as("pr"))
   }
 }

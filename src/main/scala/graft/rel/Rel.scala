@@ -261,9 +261,11 @@ object Rel {
   /** Wrap an arbitrary (possibly bag) DataFrame. */
   def bag(df: DataFrame): Rel = new Rel(df, false)
 
-  /** Read a parquet base relvar. Base tables are keyed → distinct. */
+  /** Read a parquet base relvar ([[graft.sources.Sources.parquet]]: its
+    * heading is inferred once, not per read). Base tables are keyed →
+    * distinct. */
   def parquet(spark: SparkSession, path: String): Rel =
-    distinct(spark.read.parquet(path))
+    distinct(graft.sources.Sources.parquet(spark, path))
 
   /** No-NULL discipline: the type's default value (DataType.DefaultValue,
     * DataType.cs:152-155,247-252). Used at lag/lead edges, lift-of-empty,

@@ -214,7 +214,7 @@ object BucketedStore {
     }
     val dir = dataDir(spark, path)
     val tbl = freshName("a")
-    val ddl = schemaDdl.getOrElse(spark.read.parquet(dir).schema.toDDL)
+    val ddl = schemaDdl.getOrElse(Sources.parquet(spark, dir).schema.toDDL)
     spark.sql(s"CREATE TABLE `$tbl` ($ddl) USING parquet " +
       s"CLUSTERED BY (${quoted(keys)}) SORTED BY (${quoted(keys)}) " +
       s"INTO $buckets BUCKETS LOCATION '$dir'")
@@ -467,7 +467,7 @@ object BucketedStore {
     // roll it back first (we hold the layout's writer lease)
     healAppend(spark, path)
     val dir = dataDir(spark, path)
-    val ddl = schemaDdl.getOrElse(spark.read.parquet(dir).schema.toDDL)
+    val ddl = schemaDdl.getOrElse(Sources.parquet(spark, dir).schema.toDDL)
     // select the delta's columns in the TABLE's order by NAME and CAST
     // each to the layout's recorded type (the old INSERT INTO coerced by
     // table schema; writing the delta's own types would poison the

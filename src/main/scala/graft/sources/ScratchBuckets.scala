@@ -21,9 +21,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Placement: under `spark.graft.scratchDir` (falling back to
   * `java.io.tmpdir`) — cluster deployments point it at a DFS path, exactly
-  * like `spark.graft.checkpointDir`. The layout is deleted by [[Layout
-  * .close]] when the loop's result is materialized; nothing persists
-  * across queries or runs.
+  * like `spark.graft.checkpointDir`. [[withLayout]] deletes the layout
+  * when its body returns or throws; nothing persists across queries or
+  * runs.
   */
 object ScratchBuckets {
 
@@ -70,6 +70,16 @@ object ScratchBuckets {
     try body
     finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
   }
+
+  /** Loan a scratch layout of `df` bucketed+sorted by `keys` to `body`,
+    * closing it when `body` returns OR throws — a loop that fails at
+    * round k leaves no metastore table or scratch files behind (a close
+    * that fails then is added to the body's exception as suppressed).
+    * `body` must materialize everything it returns that reads the layout
+    * (iterative callers pin their round outputs eagerly, so the final
+    * round's pin is the fence). */
+  def withLayout[A](df: DataFrame, keys: Seq[String])(body: Layout => A): A =
+    scala.util.Using.resource(create(df, keys))(body)(_.close(df.sparkSession))
 
   /** Write `df` once as a scratch layout bucketed+sorted by `keys` and
     * attach it. The write IS the one bucketing exchange; the attached

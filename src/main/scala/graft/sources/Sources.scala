@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import graft.rel.Rel
 
 /** Import sources (SURVEY §2.8): typed CSV with `name:type` header peek and
@@ -137,6 +138,79 @@ object Sources {
     val reader = spark.read.option("mode", "FAILFAST")
     Rel.fillDefaults(schema.fold(reader.json(ds))(s => reader.schema(s).json(ds)))
   }
+
+  /** THE library read of a parquet path. A base relvar's heading is fixed
+    * for its lifetime (DataHeading), but `spark.read.parquet` re-infers it
+    * on every call, and inference is a Spark job (footer read through
+    * `parallelize(…).collect()`) even for one file. The first read of a
+    * path is exactly that read; it records the resolved schema. Later
+    * reads hand the schema to the reader (`read.schema(s)`), so only the
+    * driver-side file listing remains.
+    *
+    * The cached schema is used only under the footprint it was inferred
+    * under: the data files Spark's own [[PartitioningAwareFileIndex]]
+    * listed for the read (path, length, modification time — `_`/`.` files
+    * skipped as Spark skips them) and every set `spark.sql.parquet.*`,
+    * `spark.sql.legacy.parquet.*` and partition-type-inference setting
+    * (`nanosAsLong` retypes columns). A warm read takes its listing from
+    * the index its own frame built (one listing per read); on any
+    * mismatch that frame is discarded and the path is re-read with
+    * inference, so a stale heading cannot surface.
+    *
+    * `written`: the schema of a frame the caller has just written to
+    * `path` — the read takes it (Spark's relation makes it nullable, as
+    * inference would) and neither consults nor fills the cache. */
+  def parquet(spark: SparkSession, path: String,
+              written: Option[StructType] = None): DataFrame = written match {
+    case Some(s) => spark.read.schema(s).parquet(path)
+    case None =>
+      val settings = parquetSettings(spark)
+      val warm = schemaCache.synchronized(Option(schemaCache.get(path)))
+        .collect { case (fp, s) if fp.settings == settings =>
+          (fp, spark.read.schema(s).parquet(path)) }
+        .collect { case (fp, df) if listing(df).contains(fp.files) => df }
+      warm.getOrElse {
+        val df = spark.read.parquet(path)
+        listing(df).foreach { files =>
+          schemaCache.synchronized(
+            schemaCache.put(path, (Footprint(settings, files), df.schema)))
+        }
+        df
+      }
+  }
+
+  private final case class Footprint(settings: Seq[(String, String)],
+                                     files: Seq[(String, Long, Long)])
+
+  /** Paths kept, least recently read evicted first: a long-lived gateway
+    * reading ever-new paths must not grow the cache without limit. */
+  private val SchemaCacheSize = 256
+
+  private val schemaCache =
+    new java.util.LinkedHashMap[String, (Footprint, StructType)](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, (Footprint, StructType)]): Boolean =
+        size > SchemaCacheSize
+    }
+
+  private def parquetSettings(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+      k.startsWith("spark.sql.legacy.parquet.") ||
+      k == "spark.sql.sources.partitionColumnTypeInference.enabled"
+    }.toSeq.sorted
+
+  /** The data files the frame's own file index listed; None when the read
+    * is not a listed file relation (nothing to key a cache entry on). */
+  private def listing(df: DataFrame): Option[Seq[(String, Long, Long)]] =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    }.collect { case r: HadoopFsRelation => r.location }.collect {
+      case index: PartitioningAwareFileIndex =>
+        index.allFiles()
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+          .sorted
+    }
 
   /** JDBC import (DataSourceSql, Andl.Runtime/DataSourceSql.cs:29-80):
     * the full source surface includes sql/odbc/oledb connections; on Spark

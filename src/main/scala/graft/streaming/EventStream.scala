@@ -56,7 +56,7 @@ object EventStream {
     // FileStreamSink metadata probe). Pinning a hardcoded schema instead
     // silently nulls renamed columns and mis-units retyped ones; only the
     // event-time normalization is ours ([[Sources.nanosTsToMicros]]).
-    val raw = spark.read.parquet(dir).schema
+    val raw = graft.sources.Sources.parquet(spark, dir).schema
     graft.sources.Sources.nanosTsToMicros(spark.readStream.schema(raw).parquet(path))
   }
 

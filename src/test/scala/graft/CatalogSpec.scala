@@ -1264,6 +1264,60 @@ class CatalogSpec extends SparkSpec {
       "collapsing key update violated set semantics")
     cat.close()
   }
+
+  // a relvar whose heading mixes non-nullable primitives with nested,
+  // decimal and timestamp columns: the read-back must surface it as
+  // inference would (all nullable), not as the in-memory frame had it
+  private def mixedHeading(id: Long): Rel = Rel.distinct(
+    Seq((id, id.toInt, Seq(id.toDouble), s"r$id")).toDF("id", "n", "xs", "s")
+      .select(col("id"), col("n"), col("xs"), col("s"),
+        struct(col("n"), col("s")).as("st"),
+        col("n").cast("decimal(18,2)").as("d"),
+        timestamp_seconds(col("id")).as("ts")))
+
+  // the schema-inference job runs outside any SQL execution (a write's
+  // jobs all carry an execution id), so it is the one non-SQL job here
+  private def nonSqlJobs(jobs: Seq[org.apache.spark.scheduler.SparkListenerJobStart]) =
+    jobs.filter(j => Option(j.properties)
+      .forall(_.getProperty("spark.sql.execution.id") == null))
+
+  private def readBackRoot(r: Rel): String =
+    new org.apache.hadoop.fs.Path(r.df.inputFiles.head).getParent.toString
+
+  test("cadence snapshot reads back under the written heading: schema " +
+    "equals a fresh inferring read, and the read-back launches no job") {
+    val cat = new Catalog(spark)
+    cat.define("M", mixedHeading(0))
+    val cadence = spark.conf.getOption("spark.graft.catalog.materializeEvery")
+      .map(_.toInt).getOrElse(8)
+    (1 until cadence - 1).foreach(i => cat.insert("M", mixedHeading(i)))
+    val (_, jobs) = jobsDuring(cat.insert("M", mixedHeading(cadence - 1)))
+    assert(cat.version("M") === cadence)
+    val snap = readBackRoot(cat.relvar("M"))
+    assert(snap.endsWith(s"v$cadence.parquet"),
+      s"version $cadence is not a snapshot read: $snap")
+    assert(cat.relvar("M").df.schema === spark.read.parquet(snap).schema)
+    assert(nonSqlJobs(jobs).isEmpty,
+      s"the snapshot read-back launched ${nonSqlJobs(jobs).size} inference job(s)")
+    assert(cat.relvar("M").count() === cadence)
+  }
+
+  test("save rebinds each relvar to its file under the written heading: " +
+    "schema equals a fresh inferring read, and the rebind launches no job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cat_rebind").toString
+    val cat = new Catalog(spark)
+    cat.define("A", mixedHeading(1))
+    cat.define("B", S)
+    val (_, jobs) = jobsDuring(cat.save(dir))
+    Seq("A", "B").foreach { n =>
+      assert(readBackRoot(cat.relvar(n)).endsWith(s"$n.parquet"))
+      assert(cat.relvar(n).df.schema ===
+        spark.read.parquet(s"$dir/$n.parquet").schema, n)
+    }
+    assert(nonSqlJobs(jobs).isEmpty,
+      s"the save rebind launched ${nonSqlJobs(jobs).size} inference job(s)")
+    assert(cat.relvar("B").relEquals(S))
+  }
 }
 
 /** Test-only Hadoop filesystem on a scheme Spark has no default binding

@@ -633,4 +633,123 @@ class SourcesSpec extends SparkSpec {
     GenPins.clear(spark, dir, "sesB")
     assert(GenPins.minPinnedByOthers(spark, dir, "sesC") === None)
   }
+
+  // ------------------------------------------------ cached parquet heading
+
+  import spark.implicits._
+
+  private def tmpPath(prefix: String): String =
+    s"${java.nio.file.Files.createTempDirectory(prefix)}/t.parquet"
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("Sources.parquet: a second read of an unchanged path launches no " +
+    "Spark job before its action, with the schema inference would give") {
+    val path = tmpPath("graft-pq-warm")
+    Seq((1, "a", 1.5), (2, "b", 2.5)).toDF("k", "v", "x")
+      .write.parquet(path)
+    val (_, coldJobs) = jobsDuring(Sources.parquet(spark, path))
+    assert(coldJobs.size === 1, "the cold read is the inferring read")
+    val (warm, warmJobs) = jobsDuring(Sources.parquet(spark, path))
+    assert(warmJobs.isEmpty,
+      s"warm read launched ${warmJobs.size} job(s) before its action")
+    assert(warm.schema === spark.read.parquet(path).schema)
+    assert(sortedRows(warm) === sortedRows(spark.read.parquet(path)))
+  }
+
+  test("Sources.parquet: overwriting a path with another heading (column " +
+    "added, dropped, retyped) reads the new heading and rows") {
+    val path = tmpPath("graft-pq-over")
+    def check(df: org.apache.spark.sql.DataFrame): Unit = {
+      df.write.mode("overwrite").parquet(path)
+      val got = Sources.parquet(spark, path)
+      assert(got.schema === spark.read.parquet(path).schema)
+      assert(sortedRows(got) === sortedRows(df))
+      assert(Sources.parquet(spark, path).schema === got.schema) // warm
+    }
+    check(Seq((1, "a"), (2, "b")).toDF("k", "v"))
+    check(Seq((1, "a", 0.5), (2, "b", 1.5)).toDF("k", "v", "w")) // added
+    check(Seq((1, 0.5), (2, 1.5)).toDF("k", "w")) // dropped
+    check(Seq((1L, "0.5"), (2L, "1.5")).toDF("k", "w")) // retyped
+  }
+
+  test("Sources.parquet: changing a keyed spark.sql.parquet.* setting " +
+    "between reads re-infers (exactly one job)") {
+    val path = tmpPath("graft-pq-conf")
+    Seq((1, "a".getBytes)).toDF("k", "b").write.parquet(path)
+    Sources.parquet(spark, path)
+    assert(jobsDuring(Sources.parquet(spark, path))._2.isEmpty)
+    val k = "spark.sql.parquet.binaryAsString"
+    spark.conf.set(k, "true")
+    try {
+      val (df, jobs) = jobsDuring(Sources.parquet(spark, path))
+      assert(jobs.size === 1, "a changed parquet setting must re-infer")
+      // a file Spark wrote carries its own schema, so binaryAsString keeps
+      // the type here; what the key guards is that it was re-read
+      assert(df.schema === spark.read.parquet(path).schema)
+    } finally spark.conf.unset(k)
+    assert(jobsDuring(Sources.parquet(spark, path))._2.size === 1,
+      "unsetting the setting changes the key again")
+  }
+
+  test("Sources.parquet: a partitioned directory keeps its partition " +
+    "column and that column's inferred type") {
+    val path = tmpPath("graft-pq-part")
+    val df = Seq((1, "a"), (2, "b"), (2, "c")).toDF("k", "v")
+    df.write.partitionBy("k").parquet(path)
+    assert(new java.io.File(s"$path/k=1").isDirectory)
+    Sources.parquet(spark, path)
+    val (warm, jobs) = jobsDuring(Sources.parquet(spark, path))
+    assert(jobs.isEmpty)
+    val fresh = spark.read.parquet(path)
+    assert(warm.schema === fresh.schema)
+    assert(warm.schema("k").dataType === IntegerType)
+    assert(sortedRows(warm.select("k", "v")) === sortedRows(df))
+  }
+
+  test("Sources.parquet: 8 threads reading one path on one session all " +
+    "get the same schema, without an exception") {
+    val path = tmpPath("graft-pq-threads")
+    Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(path)
+    val expect = spark.read.parquet(path).schema
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val futures = (1 to 8).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Seq[StructType]] {
+          def call(): Seq[StructType] =
+            (1 to 5).map(_ => Sources.parquet(spark, path).schema)
+        }))
+      val schemas = futures.flatMap(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(schemas.size === 40)
+      assert(schemas.forall(_ == expect))
+    } finally pool.shutdownNow()
+  }
+
+  test("ScratchBuckets.withLayout: a body that throws leaves no metastore " +
+    "table and no graft-scratch-* directory behind") {
+    import graft.sources.ScratchBuckets
+    val root = java.nio.file.Files.createTempDirectory("graft-scratch-root")
+    def scratchDirs = Option(root.toFile.list()).toSeq.flatten
+      .filter(_.startsWith("graft-scratch-"))
+    def tables = spark.catalog.listTables().collect().map(_.name).toSet
+    val tablesBefore = tables
+    spark.conf.set("spark.graft.scratchDir", root.toString)
+    try {
+      var seenTable = ""
+      val err = intercept[IllegalStateException] {
+        ScratchBuckets.withLayout(Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"),
+            Seq("src")) { layout =>
+          assert(layout.df.count() === 2)
+          assert(scratchDirs.size === 1, "the layout was not written")
+          seenTable = layout.table
+          throw new IllegalStateException("round 3 failed")
+        }
+      }
+      assert(err.getMessage === "round 3 failed")
+      assert(seenTable.nonEmpty && !tables.contains(seenTable))
+      assert(tables === tablesBefore, "a metastore table outlived the layout")
+      assert(scratchDirs.isEmpty, s"scratch files left: $scratchDirs")
+    } finally spark.conf.unset("spark.graft.scratchDir")
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.rel.Rel
@@ -35,6 +36,33 @@ trait SparkSpec extends AnyFunSuite {
 
   def rows[T](df: DataFrame)(f: org.apache.spark.sql.Row => T): Seq[T] =
     df.collect().toSeq.map(f)
+
+  /** `body`'s result and the start event of every Spark job launched
+    * while it ran (any thread). The listener bus is asynchronous and
+    * delivers in order, so a sentinel job runs after `body` and is polled
+    * for: once its start has arrived, every earlier job has been seen. */
+  def jobsDuring[A](body: => A): (A, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
+    @volatile var sentinelSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) != null)) sentinelSeen = true
+        else seen.add(e)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(key, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      var spins = 0
+      while (!sentinelSeen && spins < 200) { spins += 1; Thread.sleep(50) }
+      assert(sentinelSeen, "the listener never saw the sentinel job")
+      import scala.jdk.CollectionConverters._
+      (out, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
