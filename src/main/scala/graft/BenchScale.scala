@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Bpe, Cluster, Coreset, Dedup, Sampling, Similarity, TextAnalysis}
 
@@ -14,15 +14,7 @@ object BenchScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mult = args.headOption.map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Spark.local()
 
     val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
     // same producer-drift guard as the gated queries

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -11,8 +10,7 @@ import java.nio.file.{Files, Paths}
   *   sbt "runMain graft.PlanDump plans/r18 [query ...]"
   *
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_PLAN_SUFFIX
-  * (default "before"), SPARK_GRAFT_CPUS (default 32). Session configs
-  * mirror Bench.scala so the captured plans are the plans the bench runs.
+  * (default "before"), SPARK_GRAFT_CPUS (see [[Spark.cpus]]).
   *
   * NOTE: building a query's DataFrame executes any eager side work the
   * query performs (catalog mutations, streaming micro-batches), exactly
@@ -23,20 +21,11 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val outDir = args.headOption.getOrElse("plans/r18")
     val only: Set[String] = args.drop(1).toSet
     Files.createDirectories(Paths.get(outDir))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Spark.local()
     val mode = ExplainMode.fromString("formatted")
     val names = SparkEntry.benchQueries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -27,16 +26,7 @@ object Verify {
       case None => rest.filterNot(_.startsWith("--")).headOption
         .map(_.split(",").toSet).getOrElse(Set.empty)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Spark.local()
     mode match {
       case Some("decimal")   => spark.conf.set("spark.graft.decimalNumbers", "true")
       case Some("collation") => spark.conf.set("spark.graft.collation", "UNICODE")

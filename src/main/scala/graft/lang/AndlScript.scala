@@ -57,14 +57,7 @@ object AndlScript {
     * <script.andl>… [with CSV sources resolved next to each script]. */
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: AndlScript <script.andl> [more.andl…]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("andl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Spark.local()
     try args.foreach { path =>
       val f = new java.io.File(path)
       val interp = new AndlInterp(spark, Option(f.getParent).getOrElse("."))

@@ -45,25 +45,6 @@ object Dedup {
   def minhashSignature(hashedShingles: Column, numHashes: Int = 64, seed: Long = 42L): Column =
     graft.functions.MinHashSig(hashedShingles, numHashes, seed)
 
-  /** The pre-fusion Column-combinator formulation of [[minhashSignature]] —
-    * kept as the differential oracle for the native expression (same
-    * coefficient stream, must agree value-for-value on non-empty input). */
-  def minhashSignatureReference(hashedShingles: Column, numHashes: Int = 64,
-                                seed: Long = 42L): Column = {
-    val rnd = new scala.util.Random(seed)
-    // 2^31-1 (Mersenne prime): keeps h*a < 2^62, no ANSI long overflow
-    val p = 2147483647L
-    val coeffs = Seq.fill(numHashes)((math.abs(rnd.nextLong()) % (p - 1) + 1,
-                                      math.abs(rnd.nextLong()) % p))
-    // let-bind the reduced hashes: inlined, they (and the whole upstream
-    // shingle expression) would be re-evaluated once per coefficient
-    TextAnalysis.bind(transform(hashedShingles, s => pmod(s.cast("long"), lit(p)))) { hashes =>
-      array(coeffs.map { case (a, b) =>
-        array_min(transform(hashes, h => pmod(h * lit(a) + lit(b), lit(p))))
-      }: _*)
-    }
-  }
-
   /** Banded-LSH candidate pairs with an in-join signature-estimate filter.
     *
     * The signature df MUST be materialized (the callers localCheckpoint it):
@@ -177,21 +158,6 @@ object Dedup {
     graft.functions.SimHash64(
       transform(filter(split(lower(trim(text)), "[^a-z0-9]+"),
         t => length(t) > 0), t => xxhash64(t)))
-
-  /** Pre-fusion combinator formulation of [[simhash]] — differential oracle
-    * for the native expression. */
-  def simhashReference(text: Column): Column = {
-    val toks = split(lower(trim(text)), "[^a-z0-9]+")
-    // constant-folded literal array of the 64 bit masks
-    val masks = array((0 until 64).map(i => lit(1L << i)): _*)
-    TextAnalysis.bind(transform(filter(toks, t => length(t) > 0), t => xxhash64(t))) { hashes =>
-      val votes = aggregate(hashes, array_repeat(lit(0L), 64),
-        (acc, h) => zip_with(acc, masks,
-          (a, m) => a + when(h.bitwiseAND(m) =!= 0, 1L).otherwise(-1L)))
-      aggregate(zip_with(votes, masks, (v, m) => when(v > 0, m).otherwise(lit(0L))),
-        lit(0L), (acc, b) => acc.bitwiseOR(b))
-    }
-  }
 
   /** SimHash near-dup pairs with hamming distance ≤ maxDist. Blocking:
     * split the 64-bit hash into (maxDist+1) chunks — by pigeonhole, any

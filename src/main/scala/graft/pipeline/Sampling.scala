@@ -34,11 +34,6 @@ object Sampling {
   def hashBucketMemo(key: Column, buckets: Int = 100): Column =
     graft.functions.Md5Bucket(key.cast("string"), buckets)
 
-  /** Alias for the combinator formulation — the differential oracle name
-    * HashExprsSpec pins [[hashBucketMemo]] against. */
-  private[graft] def hashBucketReference(key: Column, buckets: Int = 100): Column =
-    hashBucket(key, buckets)
-
   /** Keep ~rate of rows, deterministically by `key` content. The same key
     * is kept or dropped identically in every run — a train/test split is a
     * pair of these with complementary predicates. */

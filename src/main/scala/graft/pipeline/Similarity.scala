@@ -27,12 +27,6 @@ object Similarity {
     * O(corpus·queries·dim), the engine's hottest inner loop. */
   def dot(a: Column, b: Column): Column = graft.functions.FloatVecDot(a, b)
 
-  /** Pre-fusion combinator formulation of [[dot]] — differential oracle for
-    * the native expression. */
-  def dotReference(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   /** L2 norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -57,22 +51,6 @@ object Similarity {
   def hyperplaneSig(vec: Column, planes: Int = 8, seed: Long = 7L): Column =
     graft.functions.HyperplaneSig(vec, planes, seed)
 
-  /** Pre-fusion combinator formulation of [[hyperplaneSig]] — differential
-    * oracle for the native expression. */
-  def hyperplaneSigReference(vec: Column, planes: Int = 8, seed: Long = 7L): Column = {
-    val rnd = new scala.util.Random(seed)
-    val bits = (0 until planes).map { p =>
-      // per-plane pseudo-random component for index i: hash(seed, p, i) → [-1,1]
-      val a = rnd.nextLong()
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1), (x, i) =>
-          x.cast("double") *
-            (pmod(xxhash64(i, lit(a)), lit(2000001L)).cast("double") / 1000000.0 - 1.0)),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    bits.reduce((x, y) => x.bitwiseOR(y))
-  }
 
   /** Distributed top-k per query over a scored candidate set
     * (qId, cId, cosine): phase 1 takes a local top-k per (query, physical
@@ -433,19 +411,8 @@ object Similarity {
     graft.functions.I8Dot(a.getField("q"), b.getField("q"))
       .cast("double") * a.getField("scale") * b.getField("scale")
 
-  /** Pre-fusion combinator formulation of [[dotI8]] — differential oracle
-    * for the native expression. */
-  def dotI8Reference(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a.getField("q"), b.getField("q"),
-        (x, y) => x.cast("int") * y.cast("int")),
-      lit(0), (acc, v) => acc + v)
-      .cast("double") * a.getField("scale") * b.getField("scale")
-
   // ------------------------------------------------- product quantization
 
-  /** Squared L2 distance between two float-array columns (PQ codebooks are
-    * trained in L2 space over raw subvectors — the standard formulation). */
   /** The per-code LUT hits of one encoded vector: `codes` is ordered by
     * sub_id (pqEncode's sort), the flattened per-query `__lut` array is
     * ordered by (sub_id, UNSIGNED code), so hit i lives at
@@ -479,15 +446,11 @@ object Similarity {
   /** Fused codegen'd squared L2 ([[graft.functions.FloatVecL2Sq]], r19) —
     * the inner loop of PQ training and encoding (one call per
     * subvector × code). Same left-fold double accumulation as the
-    * combinator form it replaces ([[l2sqReference]], kept as the
-    * differential oracle) → bit-identical distances. */
+    * combinator form it replaces (`KernelReference.l2sq` in the tests,
+    * the differential oracle) → bit-identical distances. PQ codebooks are
+    * trained in L2 space over raw subvectors — the standard formulation. */
   private def l2sq(a: Column, b: Column): Column =
     graft.functions.FloatVecL2Sq(a, b)
-
-  private[graft] def l2sqReference(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) =>
-      (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
 
   /** Train a product-quantization codebook: the vector is cut into `m`
     * subvectors and each subspace gets its own `codes`-entry k-means

@@ -229,25 +229,9 @@ object TextAnalysis {
   def hashedShingles(text: Column, k: Int = 3): Column =
     graft.functions.ShingleHashes(split(lower(trim(text)), "[^a-z0-9]+"), k)
 
-  /** Pre-fusion combinator formulation of [[hashedShingles]] — differential
-    * oracle for the native expression. */
-  def hashedShinglesReference(text: Column, k: Int = 3): Column =
-    bind(split(lower(trim(text)), "[^a-z0-9]+")) { toks =>
-      val idx = sequence(lit(0), greatest(size(toks) - k, lit(0)))
-      array_distinct(transform(idx,
-        i => xxhash64(array_join(slice(toks, i + 1, lit(k)), " "))))
-    }
-
   /** Hashed character n-grams (same rationale as [[hashedShingles]]). */
   def hashedCharNgrams(text: Column, n: Int = 5): Column =
     graft.functions.CharNgramHashes(regexp_replace(lower(trim(text)), "\\s+", " "), n)
-
-  /** Pre-fusion combinator formulation of [[hashedCharNgrams]]. */
-  def hashedCharNgramsReference(text: Column, n: Int = 5): Column =
-    bind(regexp_replace(lower(trim(text)), "\\s+", " ")) { s =>
-      val idx = sequence(lit(1), greatest(length(s) - (n - 1), lit(1)))
-      array_distinct(transform(idx, i => xxhash64(s.substr(i, lit(n)))))
-    }
 
   /** Privacy scrub: mask URLs then emails — a codegen'd regexp chain, no
     * UDF, narrow map (no shuffle at any scale). Patterns stay inside the

@@ -44,6 +44,25 @@ object WhileFix {
     var bailedToSpark: Boolean = false
   }
 
+  /** Frontier rows above which a round pins its step layers (r19). Each
+    * per-layer lazy pin is its OWN query execution, so a step that joins
+    * a broadcast relation REBUILDS that broadcast once per layer per
+    * round — measured 9 AQE stage jobs per round on the sf0.1
+    * reachability closure (8 of them rebuilding the same 1.6 MB edge
+    * broadcast), 1.3 s/round of pure fixed cost. Below
+    * the threshold the k layers stay LIVE legs of the round's single
+    * count query, where ReuseExchange dedups the broadcast to ONE build
+    * and the whole round is one query execution; the k(k+1)/2 step
+    * re-evaluations this costs are probe-side scans of a ≤threshold-row
+    * frontier — microseconds per 1000 rows against one hash relation —
+    * while each avoided pin saves a query execution + broadcast build
+    * (~0.15 s each). Break-even is far above this bound; above it (the
+    * corpus-scale regime, frontiers outgrowing executor-cheap recompute)
+    * the per-layer pins keep the k(k+1)/2 factor off the big data.
+    * A fixed bound for now: it does not yet look at the step's
+    * build-side regime (a bucketed-fallback step would still want pins). */
+  private val LayerPinRows = 2000000L
+
   /** Checkpoint cadence: only the FRONTIER (the new tuples) is checkpointed
     * each round — it is the only thing recomputed next round. The
     * accumulator stays a lazy union of already-checkpointed frontiers and
@@ -180,32 +199,14 @@ object WhileFix {
     // returned frame's storage and stay pinned.
     val accLegs = scala.collection.mutable.ArrayBuffer[DataFrame](acc)
     var pendingDead = List.empty[DataFrame]
-    // Layer-pin threshold (r19): each per-layer lazy pin is its OWN query
-    // execution, so a step that joins a broadcast relation REBUILDS that
-    // broadcast once per layer per round — measured 9 AQE stage jobs per
-    // round on the sf0.1 reachability closure (8 of them rebuilding the
-    // same 1.6 MB edge broadcast), 1.3 s/round of pure fixed cost. Below
-    // the threshold the k layers stay LIVE legs of the round's single
-    // count query, where ReuseExchange dedups the broadcast to ONE build
-    // and the whole round is one query execution; the k(k+1)/2 step
-    // re-evaluations this costs are probe-side scans of a ≤threshold-row
-    // frontier — microseconds per 1000 rows against one hash relation —
-    // while each avoided pin saves a query execution + broadcast build
-    // (~0.15 s each). Break-even is far above this bound; above it (the
-    // corpus-scale regime, frontiers outgrowing executor-cheap recompute)
-    // the per-layer pins keep the k(k+1)/2 factor off the big data.
-    // Conf-able for clusters: spark.graft.while.layerPinRows.
-    val layerPinRows = spark.conf
-      .getOption("spark.graft.while.layerPinRows").map(_.toLong)
-      .getOrElse(2000000L)
     while (!done && iter < maxIter) {
       // Each layer is lazily checkpointed so layer_i is computed ONCE and
       // reused both as layer_{i+1}'s input and as a union leg — without it
       // the k union legs are nested lazy plans and each round would
       // re-evaluate step() k(k+1)/2 times instead of k (worth it only for
       // frontiers big enough that recompute beats per-pin query overhead —
-      // see layerPinRows above).
-      val cacheLayers = lastFrontierRows > layerPinRows
+      // see LayerPinRows).
+      val cacheLayers = lastFrontierRows > LayerPinRows
       val layers = Seq.iterate(frontier, stepsPerRound + 1) { l =>
         val next = stepCast(l)
         if (cacheLayers) next.pinLazy() else next

@@ -43,15 +43,6 @@ object ScratchBuckets {
     spark.conf.getOption("spark.graft.scratchDir")
       .getOrElse(System.getProperty("java.io.tmpdir"))
 
-  /** Session-level bucket count for scratch layouts: explicit
-    * `spark.graft.scratchBuckets`, else the session's shuffle
-    * parallelism — scale-adaptive by construction (the bench's
-    * `$SPARK_GRAFT_CPUS` contract locally; the tuned shuffle width on a
-    * cluster), never a hard-coded local constant. */
-  def buckets(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.scratchBuckets").map(_.toInt)
-      .getOrElse(spark.sessionState.conf.numShufflePartitions)
-
   /** Run `body` with bucketed scans reporting their per-bucket SORT order
     * (`spark.sql.legacy.bucketedTableScan.outputOrdering`, planning-time
     * only, honored only when a bucket has exactly one file — always true
@@ -84,11 +75,12 @@ object ScratchBuckets {
   /** Write `df` once as a scratch layout bucketed+sorted by `keys` and
     * attach it. The write IS the one bucketing exchange; the attached
     * frame replays co-located joins on `keys` with zero further exchanges
-    * on this side. */
-  def create(df: DataFrame, keys: Seq[String],
-             numBuckets: Int = 0): Layout = {
+    * on this side. The bucket count is the session's shuffle parallelism —
+    * scale-adaptive by construction (`$SPARK_GRAFT_CPUS` locally, the
+    * tuned shuffle width on a cluster), never a hard-coded constant. */
+  private def create(df: DataFrame, keys: Seq[String]): Layout = {
     val spark = df.sparkSession
-    val b = if (numBuckets > 0) numBuckets else buckets(spark)
+    val b = spark.sessionState.conf.numShufflePartitions
     val dir = s"${scratchRoot(spark)}/graft-scratch-" +
       java.util.UUID.randomUUID().toString
     BucketedStore.write(df, dir, keys, b)

@@ -34,7 +34,7 @@ class PipelineSpec extends SparkSpec {
       .localCheckpoint()
     val both = real.select(
       Dedup.minhashSignature(col("g")).as("fused"),
-      Dedup.minhashSignatureReference(col("g")).as("ref"))
+      KernelReference.minhashSignature(col("g")).as("ref"))
     assert(both.filter(!(col("fused") <=> col("ref"))).count() === 0)
     // and the fused path runs inside generated code, not CodegenFallback
     // (checked on a fused-only plan: the reference formula's higher-order
@@ -127,10 +127,10 @@ class PipelineSpec extends SparkSpec {
     val txt = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     assert(txt.filter(!(
       TextAnalysis.hashedShingles(col("text")) <=>
-        TextAnalysis.hashedShinglesReference(col("text")))).count() === 0)
+        KernelReference.hashedShingles(col("text")))).count() === 0)
     assert(txt.filter(!(
       TextAnalysis.hashedCharNgrams(col("text")) <=>
-        TextAnalysis.hashedCharNgramsReference(col("text")))).count() === 0)
+        KernelReference.hashedCharNgrams(col("text")))).count() === 0)
     // degenerate inputs: shorter than k/n, empty string, multi-byte chars
     // (the r18 offset-walk rewrite must place windows on CHAR boundaries)
     val edge = Seq("", "ab", "one two", "   ", "héllo wörld",
@@ -138,10 +138,10 @@ class PipelineSpec extends SparkSpec {
       "🎯🎯🎯", "a🎯b🎯c").toDF("text")
     assert(edge.filter(!(
       TextAnalysis.hashedShingles(col("text")) <=>
-        TextAnalysis.hashedShinglesReference(col("text")))).count() === 0)
+        KernelReference.hashedShingles(col("text")))).count() === 0)
     assert(edge.filter(!(
       TextAnalysis.hashedCharNgrams(col("text")) <=>
-        TextAnalysis.hashedCharNgramsReference(col("text")))).count() === 0)
+        KernelReference.hashedCharNgrams(col("text")))).count() === 0)
   }
 
   test("repetition signals: mode count, tie-break, cap, and degenerate inputs " +
@@ -210,16 +210,16 @@ class PipelineSpec extends SparkSpec {
       .select(col("embedding").as("a"))
     val shifted = emb.withColumn("b", reverse(col("a")))
     assert(shifted.filter(
-      !(Similarity.dot(col("a"), col("b")) <=> Similarity.dotReference(col("a"), col("b")))
+      !(Similarity.dot(col("a"), col("b")) <=> KernelReference.dot(col("a"), col("b")))
     ).count() === 0)
     val txt = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     assert(txt.filter(
-      !(Dedup.simhash(col("text")) <=> Dedup.simhashReference(col("text")))
+      !(Dedup.simhash(col("text")) <=> KernelReference.simhash(col("text")))
     ).count() === 0)
     val sigs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     assert(sigs.filter(
       !(Similarity.hyperplaneSig(col("embedding")) <=>
-        Similarity.hyperplaneSigReference(col("embedding")))
+        KernelReference.hyperplaneSig(col("embedding")))
     ).count() === 0)
   }
 
@@ -231,13 +231,13 @@ class PipelineSpec extends SparkSpec {
     // squared L2: same left-fold double accumulation
     assert(emb.filter(
       !(graft.functions.FloatVecL2Sq(col("a"), col("b")) <=>
-        Similarity.l2sqReference(col("a"), col("b")))).count() === 0)
+        KernelReference.l2sq(col("a"), col("b")))).count() === 0)
     // int8 dot through the quantized struct
     val q = emb.select(Similarity.quantizeI8(col("a")).as("qa"),
       Similarity.quantizeI8(col("b")).as("qb"))
     assert(q.filter(
       !(Similarity.dotI8(col("qa"), col("qb")) <=>
-        Similarity.dotI8Reference(col("qa"), col("qb")))).count() === 0)
+        KernelReference.dotI8(col("qa"), col("qb")))).count() === 0)
     // ADC lookup-table sum: codes spanning the SIGNED byte range
     // (production codes=256 stores 128..255 as negatives), lut of
     // m·nCodes doubles; combinator replicated verbatim from adcHits
