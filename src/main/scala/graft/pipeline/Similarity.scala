@@ -413,29 +413,23 @@ object Similarity {
 
   // ------------------------------------------------- product quantization
 
-  /** The per-code LUT hits of one encoded vector: `codes` is ordered by
-    * sub_id (pqEncode's sort), the flattened per-query `__lut` array is
-    * ordered by (sub_id, UNSIGNED code), so hit i lives at
-    * i·nCodes + (code_i & 0xff). Codes are stored as SIGNED bytes —
-    * at the production codes=256 setting, codes 128..255 read back as
-    * negatives, so both this index and [[lutFlat]]'s sort key mask to
-    * the unsigned value. */
-  private def adcHits(nCodes: Int): Column =
-    transform(col("codes"), (c, i) =>
-      element_at(col("__lut"),
-        i * nCodes + c.cast("int").bitwiseAND(lit(255)) + 1))
-
-  /** The full ADC sum Σ_i lut[i·nCodes + code_i] as ONE fused codegen'd
-    * pass ([[graft.functions.AdcLutSum]], r19) — replaces
-    * `aggregate(adcHits(n), 0.0, _+_)`, which ran two interpreted
+  /** The full ADC sum Σ_i lut[i·nCodes + (code_i & 0xff)] as ONE fused
+    * codegen'd pass ([[graft.functions.AdcLutSum]], r19). `codes` is
+    * ordered by sub_id (pqEncode's sort) and the flattened per-query
+    * `__lut` array by (sub_id, UNSIGNED code), so hit i lives at
+    * i·nCodes + (code_i & 0xff). Codes are stored as SIGNED bytes — at
+    * the production codes=256 setting, codes 128..255 read back as
+    * negatives, so both this index and [[lutFlat]]'s sort key mask to the
+    * unsigned value. Replaces an `aggregate(transform(codes, element_at
+    * (__lut, …)), 0.0, _+_)` combinator, which ran two interpreted
     * higher-order passes and an intermediate array per (corpus row ×
     * query) AND demoted its operator out of whole-stage codegen.
-    * Index-order left-fold → bit-identical doubles ([[adcHits]] stays as
-    * the differential reference). */
+    * Index-order left-fold → bit-identical doubles (PipelineSpec keeps
+    * that combinator inline as the differential reference). */
   private def adcSum(nCodes: Int): Column =
     graft.functions.AdcLutSum(col("codes"), col("__lut"), nCodes)
 
-  /** Flatten a per-(sub_id, code) LUT to the per-query array [[adcHits]]
+  /** Flatten a per-(sub_id, code) LUT to the per-query array [[adcSum]]
     * indexes: ordered by (sub_id, unsigned code). */
   private def lutFlat: Column =
     transform(sort_array(collect_list(struct(col("sub_id"),

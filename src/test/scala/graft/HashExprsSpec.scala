@@ -32,7 +32,7 @@ class HashExprsSpec extends SparkSpec {
     for (b <- Seq(2, 100, 512, 4096)) {
       val bad = strs.select(
           Sampling.hashBucketMemo(col("s"), b).as("fused"),
-          KernelReference.hashBucket(col("s"), b).as("ref"))
+          Sampling.hashBucket(col("s"), b).as("ref"))
         .where(col("fused") =!= col("ref") ||
           col("fused").isNull =!= col("ref").isNull)
         .count()
@@ -45,9 +45,9 @@ class HashExprsSpec extends SparkSpec {
       .toDF("id", "s")
     val r = df.select(
       Sampling.hashBucketMemo(col("id"), 100).as("f_id"),
-      KernelReference.hashBucket(col("id"), 100).as("r_id"),
+      Sampling.hashBucket(col("id"), 100).as("r_id"),
       Sampling.hashBucketMemo(col("s"), 100).as("f_s"),
-      KernelReference.hashBucket(col("s"), 100).as("r_s")).collect()
+      Sampling.hashBucket(col("s"), 100).as("r_s")).collect()
     r.foreach { row =>
       assert(row.isNullAt(0) === row.isNullAt(1))
       if (!row.isNullAt(0)) assert(row.getInt(0) === row.getInt(1))

@@ -14,11 +14,6 @@ object KernelReference {
   private def bind(x: Column)(body: Column => Column): Column =
     transform(array(x), x0 => body(x0)).getItem(0)
 
-  /** `Sampling.hashBucketMemo`: first 4 hex chars of md5, mod `buckets`. */
-  def hashBucket(key: Column, buckets: Int = 100): Column =
-    conv(substring(md5(key.cast("string")), 1, 4), 16, 10)
-      .cast("int") % buckets
-
   /** `Similarity.dot`. */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),

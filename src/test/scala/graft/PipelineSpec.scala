@@ -240,7 +240,8 @@ class PipelineSpec extends SparkSpec {
         KernelReference.dotI8(col("qa"), col("qb")))).count() === 0)
     // ADC lookup-table sum: codes spanning the SIGNED byte range
     // (production codes=256 stores 128..255 as negatives), lut of
-    // m·nCodes doubles; combinator replicated verbatim from adcHits
+    // m·nCodes doubles; the combinator AdcLutSum replaced, index
+    // i·nCodes + (code & 0xff)
     val nCodes = 4
     val adc = spark.range(0, 200).selectExpr(
       s"transform(sequence(0, 7), i -> cast((id * 7 + i * 3) % $nCodes + " +
