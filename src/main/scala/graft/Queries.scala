@@ -371,15 +371,10 @@ object Queries {
     cat.relvar("region").df
   }
 
-  /** The NULL-predicate UPDATE contract, storage-independent: a row
-    * where the predicate evaluates to NULL is kept UNCHANGED (the SQL
-    * UPDATE shape — CASE WHEN pred falls through to ELSE), on BOTH
-    * storage paths. The same mutation runs against a plain
-    * copy-on-write relvar and a bucketed stored layout; both results,
-    * tagged by storage, check against ONE DuckDB CASE-expression oracle
-    * — so the two paths can never silently diverge again (the old plain
-    * path's where(pred) ∪ where(!pred) split dropped NULL-predicate
-    * rows outright). */
+  /** The NULL-predicate UPDATE contract ([[graft.rel.Rel.updateWhere]])
+    * on both storage paths: the same mutation runs against a plain
+    * copy-on-write relvar and a bucketed stored layout, and both results,
+    * tagged by storage, check against ONE DuckDB CASE-expression oracle. */
   def qUpdateNull(s: SparkSession, dir: String): DataFrame = {
     closeStashed(lastUpdateNullCat)
     // r_tag is NULL for odd region keys, so startsWith over it is NULL

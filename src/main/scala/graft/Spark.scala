@@ -15,16 +15,14 @@ object Spark {
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** A `local[cpus]` session with `cpus` shuffle partitions. */
-  def local(cpus: Int = Spark.cpus): SparkSession = {
-    val spark = SparkSession.builder()
+  def local(cpus: Int = Spark.cpus): SparkSession =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.log.level", "WARN")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 }

@@ -708,28 +708,19 @@ final class Catalog(val spark: SparkSession) {
   /** update R .where(p) .{} — delete by predicate
     * (Builtin.cs:615-622, DataTableLocal.cs:834-857). A bucketed relvar
     * rewrites its layout with a filter — ZERO exchange, the surviving
-    * rows never re-pay their bucketing shuffle. SQL-shaped NULL
-    * contract, same as [[updateWhere]]: only rows where `pred` is TRUE
-    * are deleted — a NULL predicate keeps the row (a bare `!pred`
-    * filter would silently delete it). */
-  def deleteWhere(name: String, pred: Column): Unit = {
-    val survives = !coalesce(pred, lit(false))
+    * rows never re-pay their bucketing shuffle. Both storage paths run
+    * [[Rel.deleteWhere]], which states the NULL contract. */
+  def deleteWhere(name: String, pred: Column): Unit =
     bucketSpec.get(name) match {
       case Some((cols, k)) =>
-        rewriteBucketed(name, cols, k, _.filter(survives))
-      case None => swap(name, relvar(name).where(survives))
+        rewriteBucketed(name, cols, k, Rel.distinct(_).deleteWhere(pred).df)
+      case None => swap(name, relvar(name).deleteWhere(pred))
     }
-  }
 
-  /** update R .where(p) .{A:=e} — in-place update: rewrite matching rows,
-    * keep the rest (the reference's three-way split collapsed to ONE
-    * pass). Both storage paths use the same when/otherwise rewrite, so
-    * the NULL-predicate contract is storage-independent and SQL-shaped:
-    * a row where `pred` evaluates to NULL is kept UNCHANGED (the
-    * `otherwise` branch), exactly like SQL UPDATE ... WHERE — the old
-    * plain-path split (where(pred) ∪ where(!pred)) silently DROPPED
-    * such rows, and diverged from the bucketed path after
-    * defineBucketed.
+  /** update R .where(p) .{A:=e} — in-place update: both storage paths run
+    * the one-pass rewrite [[Rel.updateWhere]], which states the NULL
+    * contract and refuses a set column outside the heading or assigned
+    * twice. Set names resolve here first, Spark-style.
     *
     * Bucketed-storage cost model: an update that touches only NON-key
     * columns preserves the stored hash-partitioning, so the set-semantics
@@ -745,43 +736,30 @@ final class Catalog(val spark: SparkSession) {
     * re-fragmentation BucketedStore.rewrite's doc warns about. */
   def updateWhere(name: String, pred: Column, sets: (String, Column)*): Unit = {
     // Resolve every set-column name against the relvar's heading FIRST,
-    // Spark-style (exact match, else unique case-insensitive match), and
-    // fail LOUD on a miss: the positional select below would otherwise
-    // silently drop a typo'd or case-mismatched set — a full layout
-    // rewrite and version bump that changes nothing, with the bucket-key
-    // detection misclassified on top.
-    val heading = relvar(name).attrs
+    // Spark-style (exact match, else unique case-insensitive match), so a
+    // case-mismatched bucket-key set is still detected as a key move; a
+    // miss stays as written and Rel.updateWhere refuses it
+    val r = relvar(name)
     val resolved: Seq[(String, Column)] = sets.map { case (n, c) =>
-      val hit = heading.find(_ == n).orElse {
-        heading.filter(_.equalsIgnoreCase(n)) match {
-          case Seq(one) => Some(one)
-          case Seq() => None
+      r.attrs.find(_ == n).getOrElse {
+        r.attrs.filter(_.equalsIgnoreCase(n)) match {
+          case Seq(one) => one
+          case Seq() => n
           case many => throw new IllegalArgumentException(
             // Spark-style resolution reports ambiguity DISTINCTLY from a
             // miss: two case-variant columns both match, neither exactly
             s"updateWhere($name): column '$n' is ambiguous — matches " +
               s"(${many.mkString(", ")}); use the exact case")
         }
-      }
-      hit.getOrElse(throw new IllegalArgumentException(
-        s"updateWhere($name): no column '$n' in (${heading.mkString(", ")})")) -> c
+      } -> c
     }
-    // two bindings landing on one column (exact duplicate, or a case
-    // variant) would silently apply only the first — refuse, like SQL
-    // UPDATE refuses duplicate assignments
-    resolved.groupBy(_._1).collectFirst { case (c, xs) if xs.size > 1 => c }
-      .foreach(c => throw new IllegalArgumentException(
-        s"updateWhere($name): column '$c' assigned more than once"))
-    // single-pass when-otherwise rewrite; the dropDuplicates restores set
-    // semantics (two rows may collapse onto one tuple after the update) —
-    // a key-preserving update pays no exchange at all (the dedup clusters
-    // on the stored bucketing), a key-moving update pays exactly one
-    def sel(df: DataFrame): DataFrame = df.select(df.columns.map { a =>
-      resolved.find(_._1 == a) match {
-        case Some((_, c)) => when(pred, c).otherwise(col(a)).as(a)
-        case None => col(a)
-      }
-    }: _*)
+    // built (and its sets checked) before any layout is rewritten; the
+    // deferred dedup restores set semantics — a key-preserving update pays
+    // no exchange at all (the dedup clusters on the stored bucketing), a
+    // key-moving update pays exactly one
+    val updated = r.updateWhere(pred, resolved: _*)
+    def sel(df: DataFrame): DataFrame =
+      Rel.distinct(df).updateWhere(pred, resolved: _*).bagDF
     bucketSpec.get(name) match {
       case Some((cols, k)) =>
         val movesBuckets = resolved.exists(s => cols.contains(s._1))
@@ -791,7 +769,7 @@ final class Catalog(val spark: SparkSession) {
               .dropDuplicates())
         else
           rewriteBucketed(name, cols, k, df => sel(df).dropDuplicates())
-      case None => swap(name, Rel.distinct(sel(relvar(name).df).dropDuplicates()))
+      case None => swap(name, updated)
     }
   }
 

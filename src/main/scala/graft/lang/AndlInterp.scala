@@ -205,29 +205,15 @@ final class AndlInterp(val spark: SparkSession, val sourceDir: String,
       case UpWhere(predOpt, termsOpt) =>
         val r = toSparkRel(cur)
         val ctx = cols.Ctx(r.heading.toMap, Map.empty, env, None, cols.NoFold)
-        // SQL-shaped NULL contract, SAME as Catalog.updateWhere/deleteWhere
-        // (Catalog.scala): a row where the predicate evaluates to NULL is
-        // kept UNCHANGED on update and NEVER deleted. The coalesce makes
-        // the two-branch split below EXHAUSTIVE — a bare pred/!pred pair
-        // both reject a NULL row, silently dropping it (the r17 Catalog
-        // fix; the language's own csv source can't produce NULLs, but the
-        // JSON gateway edge can hand this interpreter a relvar that does).
-        val pred = F.coalesce(
-          predOpt.map(p => cols.compile(p, ctx).col).getOrElse(F.lit(true)),
-          F.lit(false))
-        termsOpt match {
-          case None | Some((_, Seq())) => // delete matching rows
-            env.assign(name, RelV(r.heading, r.rel.where(!pred)))
-          case Some((star, ts)) => // update-set: transform matching rows
-            val changed = applySelect(RelV(r.heading, r.rel.where(pred)),
-              star = true, ts.filterNot(_ == TStar), None, env) match {
-              case rv: RelV => rv
-              case other => sys.error(s"update transform produced $other")
-            }
-            require(changed.heading.map(_._1) == r.heading.map(_._1),
-              s"update transform must preserve the heading of $name")
-            env.assign(name, RelV(r.heading, r.rel.where(!pred).union(changed.rel)))
+        val pred = predOpt.map(p => cols.compile(p, ctx).col).getOrElse(F.lit(true))
+        val next = termsOpt match {
+          case None | Some((_, Seq())) => r.rel.deleteWhere(pred)
+          case Some((_, ts)) => r.rel.updateWhere(pred, ts.filterNot(_ == TStar).map {
+            case TExtend(n, x) => n -> cols.compile(x, ctx).col
+            case t => sys.error(s"update of $name: $t is not an A := e term")
+          }: _*)
         }
+        env.assign(name, RelV(r.heading, next))
     }
   }
 

@@ -91,6 +91,29 @@ final class Rel private (private val bag: DataFrame, val knownDistinct: Boolean)
     new Rel(out, false)
   }
 
+  /** update R .where(p) .{A := e} (Builtin.cs:615-622): ONE pass in which
+    * each assigned attribute becomes `when(pred, e).otherwise(A)`, so the
+    * old value appears once in the new value's plan (a `where(!p) ∪
+    * transform(where(p))` split references it twice, and k updates then
+    * scan it 2^k times). NULL contract, SQL-shaped: a row where `pred` is
+    * NULL is kept unchanged. The transform can map two tuples onto one, so
+    * the dedup is deferred, as [[union]]'s is. Refuses an attribute that
+    * is not in the heading or is assigned twice. */
+  def updateWhere(pred: Column, sets: (String, Column)*): Rel = {
+    sets.find(s => !attrSet(s._1)).foreach(s => throw new IllegalArgumentException(
+      s"updateWhere: no column '${s._1}' in (${attrs.mkString(", ")})"))
+    sets.groupBy(_._1).collectFirst { case (a, xs) if xs.size > 1 => a }
+      .foreach(a => throw new IllegalArgumentException(
+        s"updateWhere: column '$a' assigned more than once"))
+    val byAttr = sets.toMap
+    new Rel(bag.select(attrs.map(a => byAttr.get(a)
+      .map(e => when(pred, e).otherwise(col(a)).as(a)).getOrElse(col(a))): _*), false)
+  }
+
+  /** update R .where(p) .{} — delete the rows where `pred` is TRUE; a NULL
+    * predicate keeps the row, as in [[updateWhere]]. */
+  def deleteWhere(pred: Column): Rel = where(!coalesce(pred, lit(false)))
+
   /** take(n): any n tuples of the SET (deterministic only under order). */
   def take(n: Int): Rel = new Rel(df.limit(n), true)
 

@@ -210,40 +210,77 @@ class AlgebraPropSpec extends SparkSpec {
     }
   }
 
-  // read a language result as a set of (attr -> int) maps, either tier
-  private def relSet(i: graft.lang.AndlInterp, name: String): Set[Map[String, Int]] = {
+  // read a language result as its rows of (attr -> int) maps, either tier;
+  // a set-valued result holds no row twice
+  private def relRows(i: graft.lang.AndlInterp, name: String): Seq[Map[String, Int]] = {
     import graft.lang.AndlValues._
     i.global.lookup(name) match {
       case Some(RelV(_, rel)) =>
         val cols = rel.attrs
-        rel.df.collect().map(r => cols.map(c =>
-          c -> r.getAs[Any](c).asInstanceOf[Number].intValue).toMap).toSet
+        rel.df.collect().toSeq.map(r => cols.map(c =>
+          c -> r.getAs[Any](c).asInstanceOf[Number].intValue).toMap)
       case Some(LRelV(_, rows)) => rows.map(_.fields.toMap.map {
         case (k, NumV(d)) => k -> d.toInt
         case (k, other) => fail(s"$name.$k is $other")
-      }).toSet
+      })
       case other => fail(s"$name is $other")
     }
   }
 
+  private def relSet(i: graft.lang.AndlInterp, name: String): Set[Map[String, Int]] =
+    relRows(i, name).toSet
+
+  // one update statement over r(k, v) and its replay on a Scala set
+  private case class Verb(andl: String, replay: Set[(Int, Int)] => Set[(Int, Int)])
+
+  // every tuple with k >= c becomes (k, 0): tuples that share a key merge,
+  // so the update's deferred dedup has work to do
+  private def collapse(c: Int) = Verb(s"update r .where(k >= $c) .select{ *v := 0 }",
+    _.map { case (k, v) => if (k >= c) (k, 0) else (k, v) })
+
+  private val verbGen: Gen[Verb] = Gen.oneOf(
+    Gen.zip(Gen.choose(0, 5), Gen.choose(0, 3)).map { case (k, v) =>
+      Verb(s"update r union {{k := $k, v := $v}}", _ + ((k, v))) },
+    Gen.choose(0, 5).map(c =>
+      Verb(s"update r .where(k = $c) .select{}", _.filterNot(_._1 == c))),
+    Gen.zip(Gen.choose(0, 6), Gen.choose(1, 3)).map { case (t, d) =>
+      Verb(s"update r .where(v >= $t) .select{ *v := v + $d }",
+        _.map { case (k, v) => if (v >= t) (k, v + d) else (k, v) }) },
+    Gen.choose(0, 5).map(collapse))
+
+  // up to 32 statements, at least one of them a collapsing update
+  private val verbsGen: Gen[List[Verb]] = for {
+    vs <- Gen.choose(0, 31).flatMap(Gen.listOfN(_, verbGen))
+    at <- Gen.choose(0, vs.size)
+    c <- Gen.choose(0, 5)
+  } yield vs.patch(at, Seq(collapse(c)), 0)
+
   test("random update verbs (insert/delete/set) agree with a Scala replay") {
     import graft.lang.AndlInterp
-    forAll(tupleGen, Gen.choose(0, 5)) { (xs, c) =>
+    forAll(tupleGen, verbsGen) { (xs, verbs) =>
       if (xs.nonEmpty) {
+        val script = verbs.map(_.andl).mkString("\n")
+        val want = verbs.foldLeft(set(xs))((s, v) => v.replay(s))
+          .map(t => Map("k" -> t._1, "v" -> t._2))
+        // the row count catches an update whose merged tuples were not deduped
+        def check(in: AndlInterp, tier: String): Unit = {
+          val got = relRows(in, "r")
+          assert(got.toSet === want && got.size === want.size,
+            s"$tier relvar, input $xs:\n$script")
+        }
         val rl = xs.map { case (k, v) => s"{k := $k, v := $v}" }.mkString(",")
-        val i = new AndlInterp(spark, ".")
-        i.run(
-          s"""r := {$rl}
-             |update r union {{k := 9, v := 9}}
-             |update r .where(k = $c) .select{}
-             |update r .where(v >= 2) .select{ *v := v + 10 }""".stripMargin,
-          "prop3")
-        var want = set(xs) + ((9, 9))
-        want = want.filterNot(_._1 == c)
-        want = want.map { case (k, v) => if (v >= 2) (k, v + 10) else (k, v) }
-        assert(relSet(i, "r") ===
-          want.map(t => Map("k" -> t._1, "v" -> t._2)),
-          s"input $xs delete-key $c")
+        val onLiteral = new AndlInterp(spark, ".")
+        onLiteral.run(s"r := {$rl}\n$script", "prop3")
+        check(onLiteral, "literal")
+        // the same rows from parquet: a relvar whose plan Catalyst cannot
+        // fold, so every statement stacks on a real scan
+        val path = java.nio.file.Files.createTempDirectory("graft-prop3")
+          .resolve("r.parquet").toString
+        set(xs).toSeq.toDF("k", "v").write.parquet(path)
+        val onParquet = new AndlInterp(spark, ".")
+        onParquet.defineRelvar("r", spark.read.parquet(path))
+        onParquet.run(script, "prop3")
+        check(onParquet, "parquet")
       }
     }
   }

@@ -287,6 +287,27 @@ class HttpGatewaySpec extends SparkSpec {
       s"NULL-predicate row deleted (or survivor dropped): $afterDel")
   }
 
+  test("interpreter update-sets keep a bounded plan: 8 update-sets on a " +
+    "parquet-backed relvar leave one scan in its optimized plan") {
+    import graft.lang.AndlInterp
+    // parquet, not a local frame: Catalyst folds filters over a
+    // LocalRelation, which would hide a plan that doubles per update
+    val path = java.nio.file.Files.createTempDirectory("graft-upd-plan")
+      .resolve("r.parquet").toString
+    spark.range(64).selectExpr("id AS k", "id % 8 AS c", "CAST(id AS DOUBLE) AS v")
+      .write.parquet(path)
+    val in = new AndlInterp(spark, ".")
+    in.defineRelvar("R", spark.read.parquet(path))
+    (0 until 8).foreach(c =>
+      in.run(s"update R .where(c = $c) .select{ *v := v + 1 }", "plantest"))
+    val r = in.relvar("R")
+    val leaves = r.queryExecution.optimizedPlan.collectLeaves().size
+    assert(leaves === 1, s"8 update-sets left $leaves plan leaves")
+    val got = r.collect().map(x => x.getDouble(x.fieldIndex("k")) ->
+      x.getDouble(x.fieldIndex("v"))).toMap
+    assert(got === (0 until 64).map(k => k.toDouble -> (k + 1.0)).toMap)
+  }
+
   test("HTTP edge: GET /api replies without the Nagle/delayed-ACK stall " +
     "(median warm round trip under 15 ms)") {
     // GET /api does no interpreter or Spark work, so its round trip is the
