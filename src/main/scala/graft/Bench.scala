@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
-/** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
+/** Benchmark main: times every [[Queries.rows]] row at SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line. Failures are LOUD: a crashing query is reported in
   * an "errors" map (and to stderr) instead of masquerading as a fast
   * timing. The JSON line is printed to stdout AND written to
@@ -53,6 +53,13 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
+    // SPARK_GRAFT_BENCH_FILTER: comma-separated row names (exact match)
+    // for single-query perf iteration; unset = the full suite. An unknown
+    // name fails here, before the session starts.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty))
+    val names = only.fold(Queries.rows)(Queries.named(_))
+      .map(r => r.name -> r.fn).sortBy(_._1)
     val spark = Spark.local()
     try {
       warmCodegen(spark)
@@ -66,12 +73,6 @@ object Bench {
       }
     } catch { case e: Throwable => System.err.println(s"[bench] warmup: $e") }
 
-    // SPARK_GRAFT_BENCH_FILTER: comma-separated query names (exact match)
-    // for single-query perf iteration; unset = the full suite.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.benchQueries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     // per-query samples across sweeps, tagged with their sweep index; a
     // query that fails in one sweep is reported in errors but keeps the
     // samples from sweeps that succeeded
@@ -86,20 +87,11 @@ object Bench {
     // the suite-context tails prior rounds had to adjudicate away. The
     // drain runs OUTSIDE the timed window — per-query cost stays honest,
     // and every query measures the engine, not its predecessors' residue.
-    def drainNewPins[A](body: => A): A = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      try body
-      finally {
-        val now = spark.sparkContext.getPersistentRDDs
-        now.keysIterator.filterNot(before)
-          .foreach(id => now.get(id).foreach(_.unpersist(blocking = false)))
-      }
-    }
     def runSweep(label: String): Unit = {
       val idx = sweeps.size
       val s0 = System.nanoTime()
       names.foreach { case (name, fn) =>
-        try drainNewPins {
+        try Spark.drainNewPins(spark) {
           val t0 = System.nanoTime()
           fn(spark, sfDir).count()
           samples(name) = samples(name) :+ (idx -> (System.nanoTime() - t0) / 1e9)
@@ -228,7 +220,7 @@ object Bench {
           f"[bench] $n in-suite $med%.2f s breaches 1.5x anchor $a%.2f s — isolated re-measure")
         val fn = names.find(_._1 == n).get._2
         val xs = (1 to 5).flatMap { _ =>
-          drainNewPins {
+          Spark.drainNewPins(spark) {
             val t0 = System.nanoTime()
             try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
             catch { case _: Throwable => None }

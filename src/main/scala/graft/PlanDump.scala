@@ -23,13 +23,13 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val outDir = args.headOption.getOrElse("plans/r18")
-    val only: Set[String] = args.drop(1).toSet
+    val only = args.drop(1)
+    val rows = (if (only.isEmpty) Queries.rows else Queries.named(only))
+      .sortBy(_.name)
     Files.createDirectories(Paths.get(outDir))
     val spark = Spark.local()
     val mode = ExplainMode.fromString("formatted")
-    val names = SparkEntry.benchQueries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only(n) }
-    names.foreach { case (name, fn) =>
+    rows.foreach { case Queries.Row(name, fn, _, _) =>
       try {
         val df = fn(spark, sfDir)
         val txt = df.queryExecution.explainString(mode)

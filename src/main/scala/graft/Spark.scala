@@ -25,4 +25,19 @@ object Spark {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.log.level", "WARN")
       .getOrCreate()
+
+  /** Runs `body`, then unpersists every RDD it left persisted on the
+    * context, so rows run one after another on one thread (Bench, Verify)
+    * each start on a clean block store. The diff is context-wide: work
+    * running concurrently on the same context would lose its pins too, so
+    * library code drains through [[graft.rel.Checkpoint.openLedger]]. */
+  def drainNewPins[A](spark: SparkSession)(body: => A): A = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try body
+    finally {
+      val now = spark.sparkContext.getPersistentRDDs
+      now.keysIterator.filterNot(before)
+        .foreach(id => now.get(id).foreach(_.unpersist(blocking = false)))
+    }
+  }
 }

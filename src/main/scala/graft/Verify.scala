@@ -1,11 +1,14 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+/** Correctness dump: each oracle-gated [[Queries.rows]] result → parquet,
+  * plus oracle_sql.json holding the same rows' oracle SQL, for the DuckDB
+  * compare (tools/diffcheck.py). Every dumped row has its oracle, so
+  * tools/diffcheck.py must report ROWS-ONLY 0.
   *
   * Optional args after `<sfDir> <outDir>`:
-  *   - `name1,name2,…`   run only these queries (iteration aid)
-  *   - `--subset=core`   the relational-core §2 rows ([[Queries.relationalCore]])
+  *   - `name1,name2,…`   run only these gated rows (iteration aid); a name
+  *                       that is not one fails the run before Spark starts
+  *   - `--subset=core`   the relational-core §2 rows (`Queries.Row.core`)
   *   - `--mode=decimal`  run under `spark.graft.decimalNumbers=true` —
   *                       the language's exact-decimal numeric domain
   *   - `--mode=collation` run under `spark.graft.collation=UNICODE` —
@@ -13,19 +16,25 @@ import java.nio.file.{Files, Paths}
   * The mode sweeps are the parity gate: the relational core must diffcheck
   * PASS under each mode (tools/paritycheck.sh drives both). */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0); val outDir = args(1)
-    val rest = args.drop(2)
-    val mode = rest.collectFirst { case s if s.startsWith("--mode=") =>
-      s.stripPrefix("--mode=") }
-    val subset = rest.collectFirst { case s if s.startsWith("--subset=") =>
-      s.stripPrefix("--subset=") }
-    val only: Set[String] = subset match {
-      case Some("core") => Queries.relationalCore
+
+  /** The gated rows that the args after `<sfDir> <outDir>` select. */
+  def select(rest: Seq[String]): Seq[Queries.Row] = {
+    val gated = Queries.rows.filter(_.oracle.isDefined)
+    rest.collectFirst { case s if s.startsWith("--subset=") =>
+      s.stripPrefix("--subset=") } match {
+      case Some("core") => gated.filter(_.core)
       case Some(other) => sys.error(s"unknown subset $other")
       case None => rest.filterNot(_.startsWith("--")).headOption
-        .map(_.split(",").toSet).getOrElse(Set.empty)
+        .fold(gated)(names => Queries.named(names.split(","), gated))
     }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = args(0); val outDir = args(1)
+    val rest = args.toSeq.drop(2)
+    val mode = rest.collectFirst { case s if s.startsWith("--mode=") =>
+      s.stripPrefix("--mode=") }
+    val selected = select(rest)
     val spark = Spark.local()
     mode match {
       case Some("decimal")   => spark.conf.set("spark.graft.decimalNumbers", "true")
@@ -34,28 +43,20 @@ object Verify {
       case None              => ()
     }
     new java.io.File(outDir).mkdirs()
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (k, _) => only(k) }
-    selected.foreach { case (name, fn) =>
-      // drain each query's pins before the next: ~180 queries' worth of
+    selected.foreach { r =>
+      // drain each row's pins before the next: ~180 rows' worth of
       // lazily-returned results' localCheckpoints in one JVM is storage
-      // pressure the queries themselves never ask for (mirrors Bench)
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally {
-        val now = spark.sparkContext.getPersistentRDDs
-        now.keysIterator.filterNot(before)
-          .foreach(id => now.get(id).foreach(_.unpersist(blocking = false)))
+      // pressure the rows themselves never ask for (as in Bench)
+      try Spark.drainNewPins(spark) {
+        r.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${r.name}")
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] ${r.name} failed: ${e.getMessage}")
       }
     }
     def q(s: String): String = graft.types.Json.str(s)
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected.flatMap(r => r.oracle.map(sql => s"${q(r.name)}: ${q(sql)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

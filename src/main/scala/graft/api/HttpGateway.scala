@@ -116,10 +116,8 @@ final class HttpGateway(spark: SparkSession, port: Int = 0,
           case ("GET", db :: name :: Nil) =>
             val in = interp(db)
             in.synchronized {
-            val rows = in.relvar(name).toJSON.take(maxRows + 1)
-            require(rows.length <= maxRows,
-              s"GetValue($name): over $maxRows rows — page with where/take")
-            200 -> rows.mkString("[", ",", "]")
+            200 -> graft.sources.Sources.jsonOut(in.relvar(name), maxRows,
+              s"GetValue($name)")
           }
           case ("PUT", db :: name :: Nil) =>
             val in = interp(db)

@@ -26,18 +26,12 @@ final class Session private (val spark: SparkSession, val catalog: Catalog) {
   def setScalar(name: String, v: Any): Unit = catalog.set(name, v)
 
   /** GetValue at the JSON boundary (Gateway.cs JsonCall → GetValue): the
-    * relvar serialized as a JSON array of row objects via the DataFrame
-    * JSON codec (to_json per row — types, nesting and escaping follow the
-    * SQL codec, not hand-rolled strings). An EDGE verb for API-sized
-    * results: bounded by `maxRows` and fails loud past it — a 100 TB
-    * relvar is not a JSON payload; page it with where/take first. */
-  def getValueJson(name: String, maxRows: Int = 1 << 20): String = {
-    val rows = catalog.relvar(name).df.toJSON.take(maxRows + 1)
-    require(rows.length <= maxRows,
-      s"getValueJson($name): over $maxRows rows — page with where/take, " +
-        "or use getValue and keep the data distributed")
-    rows.mkString("[", ",", "]")
-  }
+    * relvar as a JSON array of row objects, through the shared
+    * [[graft.sources.Sources.jsonOut]] outlet — bounded by `maxRows`, past
+    * which it fails loud (use getValue and keep the data distributed). */
+  def getValueJson(name: String, maxRows: Int = 1 << 20): String =
+    graft.sources.Sources.jsonOut(catalog.relvar(name).df, maxRows,
+      s"getValueJson($name)")
 
   /** SetValue at the JSON boundary (Gateway.cs JsonCall → SetValue): parse
     * a JSON array (or JSON-lines) payload with the DataFrame JSON codec.

@@ -122,10 +122,6 @@ object Builtins {
   def fail(code: String, message: String): Nothing =
     throw new RuntimeException(s"$code: $message")
 
-  /** assert(cond, message) (Builtin.Assert). */
-  def assertThat(cond: Boolean, message: String): Unit =
-    if (!cond) fail("assert", message)
-
   // ---------------------------------------------------------------- time
 
   /** now() (Builtin.cs:968-970). Nondeterministic by nature — fixed per

@@ -70,8 +70,6 @@ object Scalar {
   // ------------------------------------------------------------------ date
   // `date` is a user subtype of `time` in the reference (Builtin.cs:1022-1048)
 
-  def toDateCol(t: Column): Column = to_date(t)
-  def dateYmd(y: Column, m: Column, d: Column): Column = make_date(y, m, d)
   def yearOf(d: Column): Column = year(d)
   def monthOf(d: Column): Column = month(d)
   def dayOf(d: Column): Column = dayofmonth(d)

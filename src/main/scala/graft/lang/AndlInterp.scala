@@ -1397,8 +1397,6 @@ object AndlInterp {
 
     def names: Seq[String] = parent.map(_.names).getOrElse(Nil) ++ vars.keys.toSeq
   }
-
-  def rootEnv(): Env = new Env(None)
 }
 
 /** Driver-tier scalar replicas of the engine-tier pipeline signals

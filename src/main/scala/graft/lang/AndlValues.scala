@@ -333,21 +333,6 @@ object AndlValues {
     a.rel.relEquals(b.rel)
   }
 
-  def relSub(a: RelV, b: RelV): Boolean = {
-    if (a.heading.isEmpty || b.heading.isEmpty)
-      return a.rel.count() == 0 || (sameDegZero(a, b) && b.rel.count() > 0)
-    a.rel.sub(b.rel)
-  }
-
-  def relSep(a: RelV, b: RelV): Boolean = {
-    if (a.heading.isEmpty || b.heading.isEmpty)
-      return a.rel.count() == 0 || b.rel.count() == 0
-    a.rel.sep(b.rel)
-  }
-
-  private def sameDegZero(a: RelV, b: RelV): Boolean =
-    a.heading.isEmpty && b.heading.isEmpty
-
   def valueEquals(a: Value, b: Value): Boolean = (a, b) match {
     case (x: RelV, y: RelV) => relEquals(x, y)
     case (x: LRelV, y: LRelV) => x == y

@@ -737,16 +737,4 @@ object Multimodal {
     decoded.withColumn("target_width", ceil(col("width") * scale).cast("int"))
            .withColumn("target_height", ceil(col("height") * scale).cast("int"))
   }
-
-  /** Frame sampling for video assets: every `everyN`-th frame index up to
-    * `maxFrames` — generates (asset_id, frame_idx) rows to drive a frame
-    * decoder, without touching payload bytes. */
-  def frameSample(assets: DataFrame, fakeFps: Int = 30, everyN: Int = 30,
-                  maxFrames: Int = 16): DataFrame = {
-    // stub duration: derived from payload size (1 "second" per 1000 bytes)
-    val nFrames = least((col("meta.n_bytes") / 1000 * fakeFps).cast("int"), lit(maxFrames * everyN))
-    assets.filter(col("modality") === "video")
-      .select(col("asset_id"),
-        explode(sequence(lit(0), greatest(nFrames - 1, lit(0)), lit(everyN))).as("frame_idx"))
-  }
 }

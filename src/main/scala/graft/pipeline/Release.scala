@@ -106,16 +106,6 @@ object Release {
     finally out.close()
   }
 
-  /** Counterpart read for [[writeTextFile]] — same FS resolution. */
-  def readTextFile(spark: org.apache.spark.sql.SparkSession,
-                   path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
   /** Load a published release's drift baseline as the reference side of a
     * [[Profile.driftReport]] / [[graft.streaming.DriftStream.Monitor]]
     * comparison — without touching the release's data files. */

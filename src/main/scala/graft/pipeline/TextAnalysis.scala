@@ -27,11 +27,6 @@ object TextAnalysis {
     when(length(trim(text)) === 0, lit(0))
       .otherwise(size(split(trim(text), "\\s+")))
 
-  /** BPE-ish subword count: word chunks, digits, punctuation runs counted
-    * separately (a cheap proxy for tokenizer load estimation). */
-  def subwordCount(text: Column): Column =
-    size(regexp_extract_all(text, lit("[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9\\s]"), lit(0)))
-
   /** Character count. */
   def charCount(text: Column): Column = length(text)
 
@@ -210,14 +205,6 @@ object TextAnalysis {
     when(text.isNull || length(trim(text)) === 0,
       array().cast("array<string>")).otherwise(sel)
   }
-
-  /** Character n-grams (for n-gram Jaccard dedup). The normalized string is
-    * let-bound — inlining it would re-run the regexp once per index. */
-  def charNgrams(text: Column, n: Int = 5): Column =
-    bind(regexp_replace(lower(trim(text)), "\\s+", " ")) { s =>
-      val idx = sequence(lit(1), greatest(length(s) - (n - 1), lit(1)))
-      array_distinct(transform(idx, i => s.substr(i, lit(n))))
-    }
 
   /** Hashed word k-shingles: 64-bit hashes instead of strings. At scale the
     * candidate join carries these arrays through a shuffle and intersects

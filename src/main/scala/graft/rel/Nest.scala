@@ -32,8 +32,4 @@ object Nest {
     val inner = exploded.select("__x.*").columns
     Rel.bag(exploded.select((others.map(col) ++ inner.map(c => col(s"__x.$c"))): _*))
   }
-
-  /** RVA value equality as a Column (nested relations are values —
-    * TypedValue.cs:507-543): canonical arrays compare with `===`. */
-  def rvaEquals(a: Column, b: Column): Column = a === b
 }

@@ -274,7 +274,6 @@ final class Rel private (private val bag: DataFrame, val knownDistinct: Boolean)
   // --------------------------------------------------------------- output
 
   def show(n: Int = 20): Unit = df.show(n, truncate = false)
-  def explainFormatted(): Unit = df.explain("formatted")
 }
 
 object Rel {

@@ -9,14 +9,14 @@ import org.apache.spark.sql.functions._
   * Why this matters at 100 TB: parquet readers skip files/row-groups via
   * min/max statistics, but a table sorted on ONE column only clusters that
   * column — a predicate on a second dimension still touches every file.
-  * Interleaving the bits of two (or three) bucketized dimensions into one
+  * Interleaving the bits of two bucketized dimensions into one
   * sort key gives every file a tight min/max range on EVERY interleaved
   * dimension simultaneously, so `WHERE x BETWEEN … AND y BETWEEN …` prunes
   * multiplicatively. This is the same layout idea Delta/Iceberg expose as
   * `OPTIMIZE ZORDER BY`, built here from pure integer arithmetic.
   *
   * Everything is plain `Column` bit-twiddling (the classic mask-shift
-  * "Part1By1"/"Part1By2" spread) — whole-stage-codegen'd, no UDF — and the
+  * "Part1By1" spread) — whole-stage-codegen'd, no UDF — and the
   * write arrangement is ONE `repartitionByRange` exchange on the key plus a
   * partition-local sort, exactly the shuffle a global sort would cost.
   */
@@ -35,28 +35,10 @@ object Layout {
     shiftleft(s2, 1).bitwiseOR(s2).bitwiseAND(lit(0x55555555L))
   }
 
-  /** Spread with TWO zero bits between each data bit ("Part1By2"), for
-    * three-dimensional interleave; `bits` ≤ 21 keeps 3·bits ≤ 63. */
-  def spreadBits2(x0: Column, bits: Int = 21): Column = {
-    require(bits >= 1 && bits <= 21, s"spreadBits2: bits must be 1..21, got $bits")
-    val x = x0.cast("long").bitwiseAND(lit((1L << bits) - 1))
-    val a = shiftleft(x, 32).bitwiseOR(x).bitwiseAND(lit(0x1F00000000FFFFL))
-    val b = shiftleft(a, 16).bitwiseOR(a).bitwiseAND(lit(0x1F0000FF0000FFL))
-    val c = shiftleft(b, 8).bitwiseOR(b).bitwiseAND(lit(0x100F00F00F00F00FL))
-    val d = shiftleft(c, 4).bitwiseOR(c).bitwiseAND(lit(0x10C30C30C30C30C3L))
-    shiftleft(d, 2).bitwiseOR(d).bitwiseAND(lit(0x1249249249249249L))
-  }
-
   /** Two-dimensional Z-order key: interleave the low `bits` bits of two
     * non-negative bucket ids (x gets the even bit positions, y the odd). */
   def zorderKey(x: Column, y: Column, bits: Int = 16): Column =
     spreadBits1(x, bits).bitwiseOR(shiftleft(spreadBits1(y, bits), 1))
-
-  /** Three-dimensional Z-order key. */
-  def zorderKey3(x: Column, y: Column, z: Column, bits: Int = 21): Column =
-    spreadBits2(x, bits)
-      .bitwiseOR(shiftleft(spreadBits2(y, bits), 1))
-      .bitwiseOR(shiftleft(spreadBits2(z, bits), 2))
 
   /** Bucketize a numeric column into [0, 2^bits) over a KNOWN [min, max]
     * domain (clamped). Fixed-width buckets keep the key a pure narrow map;

@@ -139,6 +139,19 @@ object Sources {
     Rel.fillDefaults(schema.fold(reader.json(ds))(s => reader.schema(s).json(ds)))
   }
 
+  /** THE JSON boundary write, shared by Session.getValueJson and
+    * HttpGateway's GET: `df` as a JSON array of row objects through the
+    * DataFrame JSON codec (types, nesting and escaping follow the SQL
+    * codec, not hand-rolled strings). An edge for API-sized results: past
+    * `maxRows` rows it fails loud, naming `what` — a 100 TB relvar is not
+    * a JSON payload; page it with where/take first. */
+  def jsonOut(df: org.apache.spark.sql.DataFrame, maxRows: Int, what: => String): String = {
+    val rows = df.toJSON.take(maxRows + 1)
+    require(rows.length <= maxRows,
+      s"$what: over $maxRows rows — page with where/take")
+    rows.mkString("[", ",", "]")
+  }
+
   /** THE library read of a parquet path. A base relvar's heading is fixed
     * for its lifetime (DataHeading), but `spark.read.parquet` re-infers it
     * on every call, and inference is a Spark job (footer read through

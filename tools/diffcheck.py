@@ -6,7 +6,10 @@ Usage: python3 tools/diffcheck.py <sfDir> <verifyOutDir>
 For each query result parquet under <verifyOutDir>/<name>/, runs the
 corresponding oracle SQL from oracle_sql.json in DuckDB over the sf tables,
 canonicalizes both (sort columns by name, sort rows, round floats), and
-reports match/mismatch per query.
+reports match/mismatch per query. An oracle entry with no result dir (its
+query threw in Verify) is a FAIL; a result dir with no oracle entry is
+ROWS-ONLY. Exits non-zero unless FAIL and ROWS-ONLY are both 0 and at
+least one row passed.
 """
 import json, sys, glob, os
 import duckdb
@@ -68,9 +71,12 @@ for d in sorted(glob.glob(f"{out_dir}/*/")):
             detail.append(f"{c}[{i}]: got {got[c][i]!r} want {want[c][i]!r}")
         fails.append((name, f"values: {detail}")); continue
     passes.append((name, len(got)))
+dumped = {os.path.basename(d.rstrip("/")) for d in glob.glob(f"{out_dir}/*/")}
+for name in sorted(set(oracle) - dumped):
+    fails.append((name, "no result dir (the query failed in Verify)"))
 
 print(f"PASS {len(passes)}  FAIL {len(fails)}  ROWS-ONLY {len(skips)}")
 for n, r in passes: print(f"  pass {n} ({r} rows)")
 for n, r in skips: print(f"  rows-only {n} ({r} rows)")
 for n, msg in fails: print(f"  FAIL {n}: {msg}")
-sys.exit(1 if fails else 0)
+sys.exit(1 if fails or skips or not passes else 0)
